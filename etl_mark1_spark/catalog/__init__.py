@@ -111,9 +111,10 @@ DRIVER_PREFIX_ROUND = 14
 #:     ngram novelty — all ALSO touched by this round's gram-builder or
 #:     graph-degree rework.
 #:   * 15 gram-builder (bind_once) re-confirmations: every oracle-exact
-#:     entry whose lineage reaches char_shingles / word_ngrams /
-#:     word_ngram_col / _positioned_grams / repetition_profile, which
-#:     round 14 rewrote to evaluate their inputs once per row.
+#:     entry whose lineage reaches a gram builder — since consolidated
+#:     into functions/grams.py (word_ngrams / char_shingles arrays,
+#:     word_ngram_rows rows), which round 14 rewrote to evaluate their
+#:     inputs once per row.
 #:   * 16 postings-path re-confirmations: the build/merge/incremental
 #:     dictionary entries and the whole persisted-index family, whose
 #:     build_scored_postings round 14 rewrote (explode + dl-on-group-key

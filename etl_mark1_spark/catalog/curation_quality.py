@@ -211,17 +211,14 @@ def bloom_contaminated_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly — the sketch can only shrink the join, never change the
     answer. Reference surface: decontamination as plain SQL semi-join
     through backend/services/duckdb_engine.py:84-119."""
-    from etl_mark1_spark.functions.text import normalized_text
+    from etl_mark1_spark.functions.grams import tokens, word_ngram_rows
     from etl_mark1_spark.operators.bloom import bloom_semi_filter
-    from etl_mark1_spark.operators.dedup import ensure_parallelism, word_ngrams
+    from etl_mark1_spark.operators.dedup import ensure_parallelism
 
     # the gram explode multiplies the narrow single-split doc scan ~300x;
     # fan the 5k-row doc table out first so the probe runs on all cores
     docs = ensure_parallelism(t(spark, sf_dir, "documents"))
-    long_enough = F.size(F.split(normalized_text(F.col("text")), " ")) >= 6
-    grams = (docs.filter(long_enough)
-             .select("doc_id", "source",
-                     F.explode(word_ngrams(F.col("text"), 6)).alias("gram")))
+    grams = word_ngram_rows(docs, tokens("text"), 6, ("doc_id", "source"))
     ref = grams.filter(F.col("source") == "src0").select("gram").distinct()
     corpus = grams.filter(F.col("source") != "src0").select("doc_id", "gram")
     # auto-sizing costs one count job over the (small) reference but keeps

@@ -286,10 +286,9 @@ def decontam_index_delete_docs(spark: SparkSession,
     oracle computes BM25 from first principles over ONLY the
     uncontaminated documents — green means detect → delete → query
     equals build-from-clean-corpus, score-exactly, with no rebuild."""
-    from etl_mark1_spark.functions.text import normalized_text
+    from etl_mark1_spark.functions.grams import tokens, word_ngram_rows
     from etl_mark1_spark.operators.bloom import bloom_semi_filter
-    from etl_mark1_spark.operators.dedup import (ensure_parallelism,
-                                                 word_ngrams)
+    from etl_mark1_spark.operators.dedup import ensure_parallelism
     from etl_mark1_spark.operators.indexing import (bm25_search_persisted,
                                                     delete_from_index,
                                                     write_search_index)
@@ -297,10 +296,8 @@ def decontam_index_delete_docs(spark: SparkSession,
     docs = t(spark, sf_dir, "documents")
     tdir = tempfile.mkdtemp(prefix="etl_mark1_decidx_")
     write_search_index(docs, tdir)
-    long_enough = F.size(F.split(normalized_text(F.col("text")), " ")) >= 6
-    grams = (ensure_parallelism(docs).filter(long_enough)
-             .select("doc_id", "source",
-                     F.explode(word_ngrams(F.col("text"), 6)).alias("gram")))
+    grams = word_ngram_rows(ensure_parallelism(docs), tokens("text"), 6,
+                            ("doc_id", "source"))
     ref = grams.filter(F.col("source") == "src0").select("gram").distinct()
     hits = (bloom_semi_filter(
         grams.filter(F.col("source") != "src0").select("doc_id", "gram"),

@@ -105,7 +105,7 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership; the 12x4 banding detects this corpus's >= 0.9 qualifying
     pairs with p ≈ 1, deterministic for fixed data/seeds); the oracle
     replays the truncating word-3-gram sets (short docs emit one
-    truncated gram, exactly like dedup.word_ngrams) and labels
+    truncated gram, exactly like grams.word_ngrams) and labels
     components recursively."""
     from etl_mark1_spark.operators.dedup import minhash_dedup
 

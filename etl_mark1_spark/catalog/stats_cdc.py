@@ -119,17 +119,12 @@ def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct per doc, then a count-by-gram with map-side partials; the
     HAVING bound keeps the result set tiny. Set-valued output (no top-k
     tie boundary), so the comparison is hash-exact."""
-    from etl_mark1_spark.functions.text import normalized_text
-    from etl_mark1_spark.operators.dedup import word_ngrams
+    from etl_mark1_spark.functions.grams import tokens, word_ngram_rows
 
     docs = t(spark, sf_dir, "documents")
-    # docs shorter than the gram emit one truncated gram in word_ngrams
-    # (a minhash convenience); the SQL side emits none — exclude them
-    long_enough = F.size(F.split(normalized_text(F.col("text")), " ")) >= 8
-    grams = (docs.filter(long_enough)
-             .select("doc_id",
-                     F.explode(word_ngrams(F.col("text"), 8)).alias("gram"))
-             .distinct())
+    # docs shorter than the gram emit none, as on the SQL side
+    grams = (word_ngram_rows(docs, tokens("text"), 8, ("doc_id",))
+             .select("doc_id", "gram").distinct())
     return (grams.groupBy("gram")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
             .filter(F.col("n_docs") >= 3))

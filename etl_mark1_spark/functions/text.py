@@ -120,27 +120,6 @@ def normalized_text(col: Column | str) -> Column:
     return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
 
 
-def bind_once(expr: Column, fn) -> Column:
-    """Evaluate ``expr`` ONCE per row and hand it to ``fn`` as a lambda
-    variable: ``element_at(transform(array(expr), fn), 1)``.
-
-    Why this exists (round-14, guide §1.2 "per-task work"): a
-    higher-order function's lambda body is re-evaluated PER ELEMENT, and
-    that includes any non-lambda subexpression embedded in it — Spark's
-    HOFs are CodegenFallback, so there is no common-subexpression
-    elimination on that path. A gram builder shaped
-    ``transform(sequence(1, n), i -> f(normalized_text(text), i))``
-    therefore re-runs the whole-document regex normalization once per
-    OUTPUT GRAM — O(len^2) regex work per document. It measured as the
-    minhash_neardup 32-core collapse: 32 task threads pinned inside
-    java.util.regex / interpreted eval, 4 s vs 40-75 s depending purely
-    on how well C2 had compiled the regex machinery. Binding the
-    expensive input as a lambda variable makes every per-element
-    reference an O(1) slot lookup, independent of optimizer or JIT
-    behavior."""
-    return F.element_at(F.transform(F.array(expr), fn), 1)
-
-
 def fingerprint_md5(col: Column | str) -> Column:
     """Stable document fingerprint: md5 hex of the normalized text.
 
@@ -157,15 +136,10 @@ def rolling_hash_fingerprint(col: Column | str, window: int = 64) -> Column:
     style robust fingerprint that survives small edits at the ends.
     Entirely JVM-side: sequence + transform + array_min.
     """
-    return bind_once(
-        normalized_text(col),
-        lambda norm: F.array_min(F.transform(
-            F.transform(
-                F.sequence(F.lit(1),
-                           F.greatest(F.length(norm) - F.lit(window - 1),
-                                      F.lit(1))),
-                lambda i: norm.substr(i, F.lit(window))),
-            lambda b: F.xxhash64(b))))
+    from etl_mark1_spark.functions.grams import char_shingles
+
+    return F.array_min(F.transform(char_shingles(col, window),
+                                   lambda b: F.xxhash64(b)))
 
 
 def char_entropy_stats(df, text_col: str = "text",
@@ -321,6 +295,8 @@ def repetition_profile(df, text_col: str = "text",
     """
     from pyspark.sql import Window
 
+    from etl_mark1_spark.functions.grams import tokens, word_ngram_rows
+
     text = F.col(text_col)
 
     lines = (df.select(
@@ -336,20 +312,9 @@ def repetition_profile(df, text_col: str = "text",
                        F.sum((F.col("_cnt") - 1) * F.col("_len"))
                        .alias("dup_line_chars")))
 
-    norm = normalized_text(text)
-    toks = F.split(norm, " ")
-    # token array bound once per row (bind_once): an embedded split
-    # would re-tokenize the document per OUTPUT BIGRAM in the HOF's
-    # per-element eval (round-14 fix, same mechanism as char_shingles)
-    bigrams = bind_once(
-        toks,
-        lambda tk: F.transform(
-            F.sequence(F.lit(1), F.size(tk) - 1),
-            lambda i: F.concat_ws(" ", F.slice(tk, i, 2))))
-    grams = (df.filter(F.size(toks) >= 2)
-             .select(F.col(id_col),
-                     F.length(norm).cast("long").alias("_chars"),
-                     F.explode(bigrams).alias("gram")))
+    grams = word_ngram_rows(
+        df, tokens(text), 2,
+        (id_col, F.length(normalized_text(text)).cast("long").alias("_chars")))
     gram_counts = (grams.groupBy(id_col, "_chars", "gram")
                    .agg(F.count(F.lit(1)).alias("_cnt")))
     w = Window.partitionBy(id_col).orderBy(F.desc("_cnt"), "gram")

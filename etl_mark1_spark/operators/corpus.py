@@ -20,6 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_mark1_spark.functions.grams import (tokens, word_ngram_rows,
+                                             word_ngrams)
+
 
 def _md5_bucket(col: Column, buckets: int = 100) -> Column:
     """Deterministic [0, buckets) bucket from the md5 of a value — stable
@@ -94,22 +97,6 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, text_col: str = "text",
     )
 
 
-def word_ngram_col(text_col: Column, n: int) -> Column:
-    """Word n-grams of lowercased text as an array column (JVM-side).
-    The token array binds once per row (:func:`bind_once`): an embedded
-    split would re-tokenize the whole document per OUTPUT GRAM in the
-    HOF's per-element eval (round-14 fix, same mechanism as
-    dedup.char_shingles)."""
-    from etl_mark1_spark.functions.text import bind_once
-
-    return bind_once(
-        F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != ""),
-        lambda words: F.when(F.size(words) - F.lit(n - 1) <= 0, F.array())
-        .otherwise(F.transform(
-            F.sequence(F.lit(1), F.size(words) - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)))))
-
-
 def ngram_contamination(df: DataFrame, benchmark: DataFrame, n: int = 8,
                         text_col: str = "text",
                         id_col: str = "doc_id") -> DataFrame:
@@ -122,13 +109,11 @@ def ngram_contamination(df: DataFrame, benchmark: DataFrame, n: int = 8,
     it; at 100 TB the corpus side stays a single exploded scan with
     map-side dedup of grams (distinct before join keeps shuffle volume at
     unique-gram cardinality)."""
-    corpus_grams = df.select(
-        F.col(id_col), F.explode(word_ngram_col(F.col(text_col), n))
-        .alias("_gram"))
-    bench_grams = (benchmark
-                   .select(F.explode(word_ngram_col(F.col(text_col), n))
-                           .alias("_gram"))
-                   .distinct())
+    toks = tokens(text_col, "lower_ws")
+    corpus_grams = (word_ngram_rows(df, toks, n, (id_col,))
+                    .select(id_col, F.col("gram").alias("_gram")))
+    bench_grams = (word_ngram_rows(benchmark, toks, n)
+                   .select(F.col("gram").alias("_gram")).distinct())
     return (
         corpus_grams.join(bench_grams, "_gram", "left_semi")
         .select(id_col).distinct()
@@ -1200,7 +1185,7 @@ def ngram_novelty(df: DataFrame, n: int = 5, text_col: str = "text",
     ex = (ensure_parallelism(df)
           .select(F.col(id_col),
                   F.explode(F.array_distinct(
-                      word_ngram_col(F.col(text_col), n)))
+                      word_ngrams(text_col, n, "lower_ws", "none")))
                   .alias("_gram"))
           .select(F.col(id_col), F.xxhash64("_gram").alias("_g"))
           .repartition("_g"))

@@ -28,7 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_mark1_spark.functions.text import bind_once, normalized_text
+from etl_mark1_spark.functions.grams import (char_shingles, tokens,
+                                             word_ngram_rows, word_ngrams)
 
 
 # --------------------------------------------------------------------------
@@ -185,50 +186,6 @@ def dedup_keep_best(df: DataFrame, key_col: str = "text",
 # --------------------------------------------------------------------------
 # MinHash + LSH
 # --------------------------------------------------------------------------
-
-def char_shingles(col: Column | str, k: int = 5) -> Column:
-    """k-character shingles of the normalized text (JVM-side: sequence +
-    substr). Deliberately NOT array_distinct'd: MIN-hashing ignores
-    duplicates and array_intersect/array_union are set operations, so
-    downstream MinHash and Jaccard are unaffected — skipping the dedup
-    avoids an O(n log n) pass over every document.
-
-    The normalized text is bound ONCE per row (:func:`bind_once`) — an
-    embedded ``normalized_text`` would re-run its regex per SHINGLE in
-    the HOF's per-element eval (round-14 fix; O(len^2) regex work per
-    doc, the minhash 32-core collapse)."""
-    return bind_once(
-        normalized_text(col),
-        lambda norm: F.transform(
-            F.sequence(F.lit(1),
-                       F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))),
-            lambda i: norm.substr(i, F.lit(k))))
-
-
-def word_ngrams(col: Column | str, n: int = 3) -> Column:
-    """Word n-grams of the normalized text (multiset; see char_shingles on
-    why no distinct, and on why the token array binds once per row)."""
-    return bind_once(
-        F.split(normalized_text(col), " "),
-        lambda toks: F.transform(
-            F.sequence(F.lit(0),
-                       F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1)) - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))))
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: for seed i, min over shingles of xxhash64(s, i).
-
-    xxhash64 with a distinct constant second argument acts as an independent
-    hash family member; array_min over the mapped array is the permutation
-    minimum. All whole-stage-codegen'd. For best performance pass a column of
-    pre-hashed longs (see minhash_dedup) — rehashing a long per seed is much
-    cheaper than rehashing the string num_hashes times."""
-    return F.array(*[
-        F.array_min(F.transform(shingle_col, lambda s, i=i: F.xxhash64(s, F.lit(i))))
-        for i in range(num_hashes)
-    ])
-
 
 def lsh_band_buckets(sig_col: Column | str, bands: int,
                      rows_per_band: int) -> Column:
@@ -817,22 +774,18 @@ def broadcast_ngram_decontam(
     Both sides consider only documents with >= n tokens (shorter docs
     have no full n-gram).
     """
-    toks = F.split(normalized_text(F.col(text_col)), " ")
-    ref_grams = (ensure_parallelism(reference)
-                 .filter(F.size(toks) >= n)
-                 .select(F.explode(word_ngrams(F.col(text_col), n))
-                         .alias("gram"))
-                 .distinct()).localCheckpoint()
+    ref_grams = (word_ngram_rows(ensure_parallelism(reference),
+                                 tokens(text_col), n)
+                 .select("gram").distinct()).localCheckpoint()
     if ref_grams.count() > max_ref_grams:
         raise ValueError(
             f"reference yields more than max_ref_grams={max_ref_grams} "
             "distinct grams — that is corpus-scale, not eval-suite "
             "scale; use ngram_contamination / bloom_semi_filter instead")
     corpus_grams = (ensure_parallelism(corpus)
-                    .filter(F.size(toks) >= n)
                     .select(F.col(id_col),
                             F.explode(F.array_distinct(
-                                word_ngrams(F.col(text_col), n)))
+                                word_ngrams(text_col, n, short="none")))
                             .alias("gram")))
     # inner join multiplicity is exactly 1 per shared distinct gram
     # (both sides deduped), so count(*) == count of DISTINCT shared
@@ -840,6 +793,108 @@ def broadcast_ngram_decontam(
     return (corpus_grams.join(F.broadcast(ref_grams), "gram")
             .groupBy(id_col)
             .agg(F.count(F.lit(1)).cast("long").alias("n_hits")))
+
+
+def _element_sets(df: DataFrame, text_col: str, id_col: str,
+                  ngram: int) -> tuple[DataFrame, DataFrame]:
+    """Shared prelude of :func:`setsim_join` and :func:`containment_join`:
+    ``(idmap, sets)`` where ``sets`` holds one (id_col, _set) row per
+    DISTINCT text — its distinct word ``ngram``-grams ordered by
+    ascending corpus frequency (ties on the gram) — and ``idmap`` maps
+    each representative ``_rid`` to every id carrying that text
+    (``_ids``) with ``_q`` = the text has a non-empty element set.
+
+    DUPLICATE-COLLAPSE (round 9, same reasoning as edit_distance_join):
+    verbatim-duplicate documents carry IDENTICAL element sets, and
+    prefix-join candidates grow with the PRODUCT of copy counts — v
+    copies pay v^2 candidate + verify work for pairs that are
+    definitionally a perfect match. Collapse to DISTINCT TEXTS *before*
+    tokenization (a plain string groupBy — cheaper than comparing
+    shingle arrays, and it dedups the shingle/frequency/regroup work
+    itself on duplicate-heavy corpora); the whole prefix/verify
+    pipeline runs over one representative per text, ids expand back at
+    the end, and same-text pairs are emitted directly at 1.0 whenever
+    the text yields a non-empty element set. Two different texts with
+    an identical token SET ("a b" vs "b a") stay separate reps and pair
+    up through the normal verify, unchanged. The narrow (rep, ids,
+    qualifies) map is the only retained checkpoint — it fans out three
+    ways (both expansion sides + the same-text pairs) and id-only rows
+    are cheap to hold; same contract as the fingerprint frame in
+    hamming_neardup above."""
+    words = tokens(F.col("_t"))
+    qualifies = (F.size(F.filter(words, lambda x: x != "")) >= 1
+                 if ngram == 1 else F.size(words) >= ngram)
+    groups = (ensure_parallelism(df).groupBy(F.col(text_col).alias("_t"))
+              .agg(F.min(id_col).alias("_rid"),
+                   F.collect_list(id_col).alias("_ids")))
+    idmap = groups.select("_rid", "_ids", qualifies.alias("_q")) \
+        .localCheckpoint()
+    # AQE coalesces the collapse's tiny-BYTES output to one partition,
+    # which would serialize the CPU-heavy shingle explode + verify that
+    # hang off it (the AQE-size-vs-CPU cliff the graph entries hit in
+    # round 8; measured 9.1 s vs 3.5 s on the sf0.1 entry). Fan back out
+    # to cluster parallelism — a round-robin of the DISTINCT texts,
+    # bounded by the groupBy's own shuffle.
+    par = df.sparkSession.sparkContext.defaultParallelism
+    reps = ensure_parallelism(
+        groups.select(F.col("_rid").alias(id_col), F.col("_t")),
+        min_partitions=par)
+    # only empty text has an empty token (normalized text has no
+    # whitespace runs), and it never forms a set element
+    elems = (word_ngram_rows(reps, words, ngram, (id_col,))
+             .filter(F.col("gram") != "")
+             .select(id_col, F.col("gram").alias("tok")))
+    toks = elems.distinct()
+    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("_f"))
+    sets = (toks.join(F.broadcast(freq), "tok")
+            .groupBy(id_col)
+            .agg(F.transform(
+                F.array_sort(F.collect_list(F.struct("_f", "tok"))),
+                lambda s: s["tok"]).alias("_set")))
+    return idmap, sets
+
+
+def _expand_ids(idmap: DataFrame, rep_pairs: DataFrame, score: str,
+                directed: bool) -> DataFrame:
+    """Expand (doc_a, doc_b, score) pairs of representatives (see
+    :func:`_element_sets`) back to every id pair, plus the same-text
+    pairs at 1.0 for texts with a non-empty element set. Undirected
+    pairs come out with doc_a < doc_b, directed ones in both
+    directions."""
+    ia = idmap.select(F.col("_rid").alias("doc_a"),
+                      F.explode("_ids").alias("_ia"))
+    ib = idmap.select(F.col("_rid").alias("doc_b"),
+                      F.explode("_ids").alias("_ib"))
+    a, b = F.col("_ia"), F.col("_ib")
+    if not directed:
+        a, b = F.least(a, b), F.greatest(a, b)
+    cross = (rep_pairs.join(ia, "doc_a").join(ib, "doc_b")
+             .select(a.alias("doc_a"), b.alias("doc_b"), score))
+    pair = (F.col("_ia") != F.col("_ib")) if directed \
+        else (F.col("_ia") < F.col("_ib"))
+    dups = (idmap.filter("_q").filter(F.size("_ids") >= 2)
+            .select(F.explode("_ids").alias("_ia"), "_ids")
+            .select("_ia", F.explode("_ids").alias("_ib"))
+            .filter(pair)
+            .select(F.col("_ia").alias("doc_a"),
+                    F.col("_ib").alias("doc_b"),
+                    F.lit(1.0).alias(score)))
+    return cross.unionByName(dups)
+
+
+# FLOAT-PRUNE SLACK (round 10, ADVICE): every prune below compares
+# an INTEGER quantity (a set size or overlap count) against a double
+# product like t*|x| or t/(1+t)*(|a|+|b|). Doubles round up: 0.8*35
+# is 28.000000000000004, so a pair sitting EXACTLY on the threshold
+# (jaccard == t with t representable) can fail a mathematically
+# tight prune that the exact verify would keep — recall loss against
+# the brute-force oracle (22 such (t, size) combos exist for common
+# thresholds). Relax every prune by a slack that dwarfs double
+# rounding (ulp-relative) yet stays far below 1, the integer
+# quantum: prunes can then only OVER-admit, and the exact-jaccard
+# verify remains the final word.
+def _relaxed(x: Column) -> Column:
+    return x - x * F.lit(1e-12) - F.lit(1e-9)
 
 
 def setsim_join(df: DataFrame, threshold: float = 0.6,
@@ -872,82 +927,7 @@ def setsim_join(df: DataFrame, threshold: float = 0.6,
     vocabulary (unigram sets saturate); docs shorter than ``ngram``
     tokens drop out (they have no shingle set).
     """
-    # DUPLICATE-COLLAPSE (round 9, same reasoning as edit_distance_join):
-    # verbatim-duplicate documents carry IDENTICAL element sets, and
-    # prefix-join candidates grow with the PRODUCT of copy counts — v
-    # copies pay v^2 candidate + verify work for pairs that are
-    # definitionally jaccard 1.0. Collapse to DISTINCT TEXTS *before*
-    # tokenization (a plain string groupBy — cheaper than comparing
-    # shingle arrays, and it dedups the shingle/frequency/regroup work
-    # itself on duplicate-heavy corpora); the whole prefix/verify
-    # pipeline runs over one representative per text, ids expand back at
-    # the end, and same-text pairs are emitted directly at jaccard 1.0
-    # whenever the text yields a non-empty element set. Two different
-    # texts with an identical token SET ("a b" vs "b a") stay separate
-    # reps and pair up through the normal verify, unchanged. The narrow
-    # (rep, ids, qualifies) map is the only retained checkpoint — it
-    # fans out three ways (both expansion sides + the same-text pairs)
-    # and id-only rows are cheap to hold; same contract as the
-    # fingerprint frame in hamming_neardup above.
-    docs = ensure_parallelism(df)
-
-    def _qualifies(tcol):
-        a = F.split(normalized_text(tcol), " ")
-        if ngram == 1:
-            return F.size(F.filter(a, lambda x: x != "")) >= 1
-        return F.size(a) >= ngram
-
-    groups = (docs.groupBy(F.col(text_col).alias("_t"))
-              .agg(F.min(id_col).alias("_rid"),
-                   F.collect_list(id_col).alias("_ids")))
-    idmap = groups.select(
-        "_rid", "_ids", _qualifies(F.col("_t")).alias("_q")) \
-        .localCheckpoint()
-    # AQE coalesces the collapse's tiny-BYTES output to one partition,
-    # which would serialize the CPU-heavy shingle explode + verify that
-    # hang off it (the AQE-size-vs-CPU cliff the graph entries hit in
-    # round 8; measured 9.1 s vs 3.5 s on the sf0.1 entry). Fan back out
-    # to cluster parallelism — a round-robin of the DISTINCT texts,
-    # bounded by the groupBy's own shuffle.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    reps = ensure_parallelism(
-        groups.select(F.col("_rid").alias(id_col),
-                      F.col("_t").alias(text_col)),
-        min_partitions=par)
-
-    if ngram == 1:
-        elems = (reps.select(
-            F.col(id_col),
-            F.explode(F.split(normalized_text(F.col(text_col)), " "))
-            .alias("tok"))
-            .filter(F.col("tok") != ""))
-    else:
-        arr = F.split(normalized_text(F.col(text_col)), " ")
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(arr) - F.lit(ngram - 1)),
-            lambda i: F.concat_ws(" ", F.slice(arr, i, ngram)))
-        elems = (reps.filter(F.size(arr) >= ngram)
-                 .select(F.col(id_col), F.explode(grams).alias("tok")))
-    toks = elems.distinct()
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("_f"))
-    sets = (toks.join(F.broadcast(freq), "tok")
-            .groupBy(id_col)
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("_f", "tok"))),
-                lambda s: s["tok"]).alias("_set")))
-    # FLOAT-PRUNE SLACK (round 10, ADVICE): every prune below compares
-    # an INTEGER quantity (a set size or overlap count) against a double
-    # product like t*|x| or t/(1+t)*(|a|+|b|). Doubles round up: 0.8*35
-    # is 28.000000000000004, so a pair sitting EXACTLY on the threshold
-    # (jaccard == t with t representable) can fail a mathematically
-    # tight prune that the exact verify would keep — recall loss against
-    # the brute-force oracle (22 such (t, size) combos exist for common
-    # thresholds). Relax every prune by a slack that dwarfs double
-    # rounding (ulp-relative) yet stays far below 1, the integer
-    # quantum: prunes can then only OVER-admit, and the exact-jaccard
-    # verify remains the final word.
-    def _relaxed(x: Column) -> Column:
-        return x - x * F.lit(1e-12) - F.lit(1e-9)
+    idmap, sets = _element_sets(df, text_col, id_col, ngram)
 
     size = F.size("_set")
     prefix_len = size \
@@ -998,21 +978,7 @@ def setsim_join(df: DataFrame, threshold: float = 0.6,
                  .select("doc_a", "doc_b",
                          F.round(jac, 6).alias("jaccard")))
 
-    ia = idmap.select(F.col("_rid").alias("doc_a"),
-                      F.explode("_ids").alias("_ia"))
-    ib = idmap.select(F.col("_rid").alias("doc_b"),
-                      F.explode("_ids").alias("_ib"))
-    cross = (rep_pairs.join(ia, "doc_a").join(ib, "doc_b")
-             .select(F.least("_ia", "_ib").alias("doc_a"),
-                     F.greatest("_ia", "_ib").alias("doc_b"), "jaccard"))
-    dups = (idmap.filter("_q").filter(F.size("_ids") >= 2)
-            .select(F.explode("_ids").alias("_ia"), "_ids")
-            .select("_ia", F.explode("_ids").alias("_ib"))
-            .filter(F.col("_ia") < F.col("_ib"))
-            .select(F.col("_ia").alias("doc_a"),
-                    F.col("_ib").alias("doc_b"),
-                    F.lit(1.0).alias("jaccard")))
-    return cross.unionByName(dups)
+    return _expand_ids(idmap, rep_pairs, "jaccard", directed=False)
 
 
 def containment_join(df: DataFrame, threshold: float = 0.8,
@@ -1040,53 +1006,7 @@ def containment_join(df: DataFrame, threshold: float = 0.8,
     can still follow the first shared element plus everything that
     preceded it. Returns (doc_a, doc_b, containment), a != b, BOTH
     directions when both qualify; identical texts emit 1.0 directly."""
-    docs = ensure_parallelism(df)
-
-    def _qualifies(tcol):
-        a = F.split(normalized_text(tcol), " ")
-        if ngram == 1:
-            return F.size(F.filter(a, lambda x: x != "")) >= 1
-        return F.size(a) >= ngram
-
-    groups = (docs.groupBy(F.col(text_col).alias("_t"))
-              .agg(F.min(id_col).alias("_rid"),
-                   F.collect_list(id_col).alias("_ids")))
-    idmap = groups.select(
-        "_rid", "_ids", _qualifies(F.col("_t")).alias("_q")) \
-        .localCheckpoint()
-    # same AQE-size-vs-CPU fan-out as setsim_join (the collapse output
-    # is tiny in bytes but feeds the CPU-heavy shingle stages)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    reps = ensure_parallelism(
-        groups.select(F.col("_rid").alias(id_col),
-                      F.col("_t").alias(text_col)),
-        min_partitions=par)
-
-    if ngram == 1:
-        elems = (reps.select(
-            F.col(id_col),
-            F.explode(F.split(normalized_text(F.col(text_col)), " "))
-            .alias("tok"))
-            .filter(F.col("tok") != ""))
-    else:
-        arr = F.split(normalized_text(F.col(text_col)), " ")
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(arr) - F.lit(ngram - 1)),
-            lambda i: F.concat_ws(" ", F.slice(arr, i, ngram)))
-        elems = (reps.filter(F.size(arr) >= ngram)
-                 .select(F.col(id_col), F.explode(grams).alias("tok")))
-    toks = elems.distinct()
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("_f"))
-    sets = (toks.join(F.broadcast(freq), "tok")
-            .groupBy(id_col)
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("_f", "tok"))),
-                lambda s: s["tok"]).alias("_set")))
-
-    def _relaxed(x: Column) -> Column:
-        # float-prune slack, same derivation as setsim_join: prunes may
-        # only over-admit; the exact verify decides
-        return x - x * F.lit(1e-12) - F.lit(1e-9)
+    idmap, sets = _element_sets(df, text_col, id_col, ngram)
 
     size = F.size("_set")
     prefix_len = size \
@@ -1116,21 +1036,7 @@ def containment_join(df: DataFrame, threshold: float = 0.8,
                  .select("doc_a", "doc_b",
                          F.round(cont, 6).alias("containment")))
 
-    ia = idmap.select(F.col("_rid").alias("doc_a"),
-                      F.explode("_ids").alias("_ia"))
-    ib = idmap.select(F.col("_rid").alias("doc_b"),
-                      F.explode("_ids").alias("_ib"))
-    cross = (rep_pairs.join(ia, "doc_a").join(ib, "doc_b")
-             .select(F.col("_ia").alias("doc_a"),
-                     F.col("_ib").alias("doc_b"), "containment"))
-    dups = (idmap.filter("_q").filter(F.size("_ids") >= 2)
-            .select(F.explode("_ids").alias("_ia"), "_ids")
-            .select("_ia", F.explode("_ids").alias("_ib"))
-            .filter(F.col("_ia") != F.col("_ib"))
-            .select(F.col("_ia").alias("doc_a"),
-                    F.col("_ib").alias("doc_b"),
-                    F.lit(1.0).alias("containment")))
-    return cross.unionByName(dups)
+    return _expand_ids(idmap, rep_pairs, "containment", directed=True)
 
 
 # --------------------------------------------------------------------------

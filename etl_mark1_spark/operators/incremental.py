@@ -33,8 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_mark1_spark.operators.dedup import (char_shingles,
-                                             ensure_parallelism, jaccard,
+from etl_mark1_spark.functions.grams import char_shingles
+from etl_mark1_spark.operators.dedup import (ensure_parallelism, jaccard,
                                              lsh_band_buckets,
                                              minhash_sig_aggs,
                                              minhash_sig_array)

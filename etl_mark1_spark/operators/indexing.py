@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_mark1_spark.functions.grams import word_ngram_rows
+
 #: partition count for persisted indexes — a term lookup reads exactly one
 #: of these buckets. 64 keeps sf-scale fixture writes small; production
 #: sizes it so one bucket's postings fit a scan task (buckets are a
@@ -1085,21 +1087,13 @@ def _dup_lengths(tokens: DataFrame, lengths: list[int],
     total — for a single job's overhead. The collect is at most
     ``len(lengths)`` rows."""
     lens_arr = F.array(*[F.lit(int(length)) for length in sorted(set(lengths))])
-    grams = (tokens
-             .select(F.col(id_col),
-                     F.explode(F.filter(
-                         lens_arr, lambda le: F.col("_n") >= le))
-                     .alias("_L"),
-                     F.col("_tk"), F.col("_n"))
-             .select(F.col(id_col), F.col("_L"),
-                     F.explode(F.sequence(
-                         F.lit(1), F.col("_n") - F.col("_L") + 1))
-                     .alias("_i"),
-                     F.col("_tk"))
-             .select(F.col(id_col), F.col("_L"),
-                     F.md5(F.array_join(
-                         F.slice(F.col("_tk"), F.col("_i"), F.col("_L")),
-                         " ")).alias("gram")))
+    lens = tokens.select(
+        F.col(id_col),
+        F.explode(F.filter(lens_arr, lambda le: F.col("_n") >= le))
+        .alias("_L"),
+        F.col("_tk"))
+    grams = (word_ngram_rows(lens, F.col("_tk"), "_L", (id_col, "_L"))
+             .select(id_col, "_L", F.md5("gram").alias("gram")))
     rows = (grams.groupBy("_L", "gram")
             .agg(F.count_distinct(id_col).alias("_nd"))
             .filter(F.col("_nd") >= 2)
@@ -1108,24 +1102,11 @@ def _dup_lengths(tokens: DataFrame, lengths: list[int],
 
 
 def _tokenize(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    from etl_mark1_spark.functions.text import normalized_text
+    from etl_mark1_spark.functions.grams import tokens
 
-    tk = F.split(normalized_text(F.col(text_col)), " ")
+    tk = tokens(text_col)
     return df.select(F.col(id_col), tk.alias("_tk"),
                      F.size(tk).alias("_n"))
-
-
-def _spans_of(tokens: DataFrame, length: int, id_col: str,
-              hashed: bool) -> DataFrame:
-    span = F.array_join(F.slice(F.col("_tk"), F.col("_i"), length), " ")
-    return (tokens
-            .filter(F.col("_n") >= length)
-            .select(F.col(id_col),
-                    F.explode(F.sequence(
-                        F.lit(1), F.col("_n") - length + 1)).alias("_i"),
-                    F.col("_tk"))
-            .select(F.col(id_col),
-                    (F.md5(span) if hashed else span).alias("gram")))
 
 
 def longest_dup_span(df: DataFrame, text_col: str = "text",
@@ -1191,7 +1172,7 @@ def longest_dup_span(df: DataFrame, text_col: str = "text",
         found = _dup_lengths(tokens, mids, id_col)
         lo = max([m for m in mids if m in found], default=lo)
         hi = min([m for m in mids if m not in found], default=hi)
-    spans = _spans_of(tokens, lo, id_col, hashed=False)
+    spans = word_ngram_rows(tokens, F.col("_tk"), lo, (id_col,))
     return (spans.groupBy("gram")
             .agg(F.count_distinct(id_col).alias("n_docs"),
                  F.min(id_col).cast("bigint").alias("min_doc"))

@@ -12,8 +12,8 @@ appears in k distinct documents".
 Scale shapes:
 
 - :func:`dedup_lines_within_doc` is a PURE COLUMN EXPRESSION (split →
-  keep-first-occurrence via higher-order ``filter``/``array_position`` →
-  rejoin): no Python, no shuffle, scan speed.
+  keep-first-occurrence via ``array_distinct`` → rejoin): no Python, no
+  shuffle, scan speed.
 - :func:`remove_common_lines` has exactly two shuffles at any corpus
   size: one map-side-combined count over trimmed lines, one regroup to
   reassemble documents. The removal join itself BROADCASTS: lines above
@@ -37,10 +37,10 @@ def dedup_lines_within_doc(df: DataFrame, text_col: str = "text",
                            sep: str = "\n") -> DataFrame:
     """Keep only the FIRST occurrence of each repeated line inside a
     document (order preserved) — kills the "same footer pasted after
-    every section" pattern. Whole-stage-codegen column expression."""
+    every section" pattern. ``array_distinct`` keeps first occurrences in
+    order, in one hash pass over the lines."""
     arr = F.split(F.col(text_col), re.escape(sep), -1)
-    kept = F.filter(arr, lambda x, i: F.array_position(arr, x) == i + 1)
-    return df.withColumn(out_col, F.array_join(kept, sep))
+    return df.withColumn(out_col, F.array_join(F.array_distinct(arr), sep))
 
 
 def remove_common_lines(df: DataFrame, min_docs: int,

@@ -17,8 +17,8 @@ this is part of the LLM-pipeline extension family.
 Shapes, stage by stage (100 TB reasoning):
 
 1. shingle: each doc emits its n-token windows with positions — a pure
-   flat-map (posexplode over a slice expression), no shuffle, whole-stage
-   codegen.
+   flat-map (functions/grams.py: explode of a position sequence, one
+   slice per window), no shuffle, whole-stage codegen.
 2. flag: group windows by gram, keep grams seen in >= min_docs DISTINCT
    documents. One shuffle on the gram; partial aggregation collapses each
    task's repeats map-side. ``hash_grams=True`` shuffles an 8-byte
@@ -39,37 +39,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_mark1_spark.functions.grams import tokens, word_ngram_rows
 from etl_mark1_spark.functions.text import normalized_text
+from etl_mark1_spark.operators.dedup import ensure_parallelism
 
 
-def _positioned_grams(docs: DataFrame, text_col: str, id_col: str,
-                      n: int) -> DataFrame:
-    """(id, i, gram): the n-token window starting at 1-based token
-    position i of the normalized text. Docs shorter than n tokens emit
-    nothing (they cannot contain a duplicated n-token span).
+def _merge_islands(hits: DataFrame, id_col: str, n: int) -> DataFrame:
+    """(id, span_start, span_end): flagged window starts ``pos`` merged
+    with overlapping or adjacent ones into maximal spans — a per-document
+    gaps-and-islands pass (running max of window ends, break where a
+    start passes it, sum of breaks as the island id)."""
+    w = Window.partitionBy(id_col).orderBy("pos")
+    prev_end = F.max(F.col("pos") + F.lit(n - 1)) \
+        .over(w.rowsBetween(Window.unboundedPreceding, -1))
+    brk = F.when(prev_end.isNull() | (F.col("pos") > prev_end + 1), 1) \
+        .otherwise(0)
+    islands = (hits
+               .withColumn("_brk", brk)
+               .withColumn("_island", F.sum("_brk").over(
+                   w.rowsBetween(Window.unboundedPreceding, 0))))
+    return (islands.groupBy(id_col, "_island")
+            .agg(F.min("pos").alias("span_start"),
+                 (F.max("pos") + F.lit(n - 1)).alias("span_end"))
+            .drop("_island"))
 
-    The shingle flat-map multiplies work ~n-fold per doc, so a narrow
-    few-split scan must fan out first (ensure_parallelism is a no-op on
-    frames that already shuffled or have enough splits)."""
-    from etl_mark1_spark.operators.dedup import ensure_parallelism
 
-    from etl_mark1_spark.functions.text import bind_once
-
-    docs = ensure_parallelism(docs)
-    toks = F.split(normalized_text(F.col(text_col)), " ")
-    # the token array binds once per row: an embedded split would
-    # re-tokenize the document per OUTPUT GRAM in the HOF's per-element
-    # eval (round-14 fix, same mechanism as dedup.char_shingles)
-    grams = bind_once(
-        toks,
-        lambda tk: F.transform(
-            F.sequence(F.lit(1), F.size(tk) - F.lit(n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(tk, i, n))))
-    return (docs.filter(F.size(toks) >= n)
-            .select(F.col(id_col),
-                    F.posexplode(grams).alias("_pos0", "gram"))
-            .select(id_col, (F.col("_pos0") + 1).cast("long").alias("i"),
-                    "gram"))
+def _strip_spans(docs: DataFrame, spans: DataFrame, text_col: str,
+                 id_col: str, out_col: str) -> DataFrame:
+    """(id, out_col): the normalized text without the tokens inside any
+    of the document's ``spans``; docs without spans pass through."""
+    per_doc = spans.groupBy(id_col).agg(
+        F.collect_list(F.struct("span_start", "span_end")).alias("_spans"))
+    kept = F.filter(
+        tokens(text_col),
+        lambda tok, i0: ~F.exists(
+            F.col("_spans"),
+            lambda s: (i0 + 1 >= s["span_start"]) & (i0 + 1 <= s["span_end"])
+        ))
+    return (docs.join(per_doc, id_col, "left")
+            .select(id_col,
+                    F.when(F.col("_spans").isNull(),
+                           normalized_text(F.col(text_col)))
+                    .otherwise(F.concat_ws(" ", kept)).alias(out_col)))
 
 
 def duplicate_spans(docs: DataFrame, text_col: str = "text",
@@ -83,7 +94,8 @@ def duplicate_spans(docs: DataFrame, text_col: str = "text",
     >= min_docs distinct documents, merged with overlapping or adjacent
     flagged windows into maximal spans.
     """
-    grams = _positioned_grams(docs, text_col, id_col, n)
+    grams = word_ngram_rows(ensure_parallelism(docs), tokens(text_col), n,
+                            (id_col,))
     key = "k" if hash_grams else "gram"
     keyed = grams.withColumn("k", F.xxhash64("gram")) if hash_grams else grams
     flagged = (keyed.groupBy(key)
@@ -91,22 +103,9 @@ def duplicate_spans(docs: DataFrame, text_col: str = "text",
                .filter(F.col("_nd") >= min_docs)
                .select(key))
     hits = keyed.join(flagged, key, "left_semi")
-
-    w = Window.partitionBy(id_col).orderBy("i")
-    prev_end = F.max(F.col("i") + F.lit(n - 1)) \
-        .over(w.rowsBetween(Window.unboundedPreceding, -1))
-    brk = F.when(prev_end.isNull() | (F.col("i") > prev_end + 1), 1) \
-        .otherwise(0)
-    islands = (hits
-               .withColumn("_brk", brk)
-               .withColumn("_island", F.sum("_brk").over(
-                   w.rowsBetween(Window.unboundedPreceding, 0))))
-    return (islands.groupBy(id_col, "_island")
-            .agg(F.min("i").alias("span_start"),
-                 (F.max("i") + F.lit(n - 1)).alias("span_end"))
+    return (_merge_islands(hits, id_col, n)
             .withColumn("span_tokens",
-                        F.col("span_end") - F.col("span_start") + 1)
-            .drop("_island"))
+                        F.col("span_end") - F.col("span_start") + 1))
 
 
 def strip_duplicate_spans(docs: DataFrame, text_col: str = "text",
@@ -123,20 +122,7 @@ def strip_duplicate_spans(docs: DataFrame, text_col: str = "text",
     text intact; a fully-duplicated document yields ''.
     """
     spans = duplicate_spans(docs, text_col, id_col, n, min_docs, hash_grams)
-    per_doc = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("_spans"))
-    toks = F.split(normalized_text(F.col(text_col)), " ")
-    kept = F.filter(
-        toks,
-        lambda tok, i0: ~F.exists(
-            F.col("_spans"),
-            lambda s: (i0 + 1 >= s["span_start"]) & (i0 + 1 <= s["span_end"])
-        ))
-    return (docs.join(per_doc, id_col, "left")
-            .select(id_col,
-                    F.when(F.col("_spans").isNull(),
-                           normalized_text(F.col(text_col)))
-                    .otherwise(F.concat_ws(" ", kept)).alias(out_col)))
+    return _strip_spans(docs, spans, text_col, id_col, out_col)
 
 
 def _non_first_occurrences(docs: DataFrame, text_col: str, id_col: str,
@@ -156,17 +142,18 @@ def _non_first_occurrences(docs: DataFrame, text_col: str, id_col: str,
     occurrences fall out of an equi-join back on the gram — a join AQE
     CAN skew-split. Same two-exchange budget as the window formulation,
     no per-gram sort anywhere."""
-    grams = _positioned_grams(docs, text_col, id_col, n)
+    grams = word_ngram_rows(ensure_parallelism(docs), tokens(text_col), n,
+                            (id_col,))
     firsts = (grams.groupBy("gram")
               .agg(F.min(F.struct(F.col(id_col).alias("_fid"),
-                                  F.col("i").alias("_fi"))).alias("_f"),
+                                  F.col("pos").alias("_fi"))).alias("_f"),
                    F.count(F.lit(1)).alias("_cnt"))
               .filter(F.col("_cnt") >= 2)
               .select("gram", "_f"))
     return (grams.join(firsts, "gram")
             .filter((F.col(id_col) != F.col("_f._fid"))
-                    | (F.col("i") != F.col("_f._fi")))
-            .select(id_col, "i"))
+                    | (F.col("pos") != F.col("_f._fi")))
+            .select(id_col, "pos"))
 
 
 def strip_spans_keep_first(docs: DataFrame, text_col: str = "text",
@@ -190,33 +177,8 @@ def strip_spans_keep_first(docs: DataFrame, text_col: str = "text",
     in strip_duplicate_spans. No Python, no driver data.
     """
     hits = _non_first_occurrences(docs, text_col, id_col, n)
-
-    w = Window.partitionBy(id_col).orderBy("i")
-    prev_end = F.max(F.col("i") + F.lit(n - 1)) \
-        .over(w.rowsBetween(Window.unboundedPreceding, -1))
-    brk = F.when(prev_end.isNull() | (F.col("i") > prev_end + 1), 1) \
-        .otherwise(0)
-    islands = (hits
-               .withColumn("_brk", brk)
-               .withColumn("_island", F.sum("_brk").over(
-                   w.rowsBetween(Window.unboundedPreceding, 0))))
-    spans = (islands.groupBy(id_col, "_island")
-             .agg(F.min("i").alias("span_start"),
-                  (F.max("i") + F.lit(n - 1)).alias("span_end")))
-    per_doc = spans.groupBy(id_col).agg(
-        F.collect_list(F.struct("span_start", "span_end")).alias("_spans"))
-    toks = F.split(normalized_text(F.col(text_col)), " ")
-    kept = F.filter(
-        toks,
-        lambda tok, i0: ~F.exists(
-            F.col("_spans"),
-            lambda s: (i0 + 1 >= s["span_start"]) & (i0 + 1 <= s["span_end"])
-        ))
-    return (docs.join(per_doc, id_col, "left")
-            .select(id_col,
-                    F.when(F.col("_spans").isNull(),
-                           normalized_text(F.col(text_col)))
-                    .otherwise(F.concat_ws(" ", kept)).alias(out_col)))
+    return _strip_spans(docs, _merge_islands(hits, id_col, n), text_col,
+                        id_col, out_col)
 
 
 def span_dedup_coverage(docs: DataFrame, text_col: str = "text",
@@ -231,7 +193,7 @@ def span_dedup_coverage(docs: DataFrame, text_col: str = "text",
     duplicated span; dup_tokens sums the merged maximal spans, so
     overlapping windows are not double-counted."""
     spans = duplicate_spans(docs, text_col, id_col, n, min_docs)
-    toks = F.size(F.split(normalized_text(F.col(text_col)), " "))
+    toks = F.size(tokens(text_col))
     per_doc = spans.groupBy(id_col).agg(
         F.sum("span_tokens").cast("bigint").alias("dup_tokens"))
     return (docs.join(per_doc, id_col)

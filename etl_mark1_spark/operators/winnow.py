@@ -37,28 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _gram_hashes(df: DataFrame, text_col: str, id_col: str,
-                 k: int) -> DataFrame:
-    """(doc_id, pos, ghash): md5-prefix hash (16 hex chars) of each
-    word k-gram of the normalized text, 1-based gram position. One
-    posexplode over the token array — linear, no shuffle."""
-    from etl_mark1_spark.functions.text import normalized_text
-    from etl_mark1_spark.operators.dedup import ensure_parallelism
-
-    tk = F.split(normalized_text(F.col(text_col)), " ")
-    return (ensure_parallelism(df)
-            .select(F.col(id_col).alias("doc_id"), tk.alias("_tk"),
-                    F.size(tk).alias("_n"))
-            .filter(F.col("_n") >= k)
-            .select("doc_id",
-                    F.explode(F.sequence(
-                        F.lit(1), F.col("_n") - k + 1)).alias("pos"),
-                    F.col("_tk"))
-            .select("doc_id", "pos",
-                    F.substring(F.md5(F.array_join(
-                        F.slice(F.col("_tk"), F.col("pos"), k), " ")),
-                        1, 16).alias("ghash")))
+from etl_mark1_spark.functions.grams import tokens, word_ngram_rows
+from etl_mark1_spark.operators.dedup import ensure_parallelism
 
 
 def winnow_fingerprints(df: DataFrame, text_col: str = "text",
@@ -68,13 +48,18 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     hashes, ``(doc_id, fp)``. Detection guarantee: two documents sharing
     any run of >= w + k - 1 words share at least one ``fp``.
 
-    Shape at scale: gram hashing is a map-side posexplode; the window
+    Shape at scale: gram hashing is a map-side explode; the window
     minimum runs per document ordered by position (tasks scale with
     documents — a document's gram sequence, like its token sequence
     elsewhere in this repo, is assumed task-sized); the DISTINCT is the
     only corpus-wide shuffle and carries the ~|doc|/w surviving hashes,
     not the grams."""
-    grams = _gram_hashes(df, text_col, id_col, k)
+    # (doc_id, pos, ghash): md5-prefix hash (16 hex chars) of each word
+    # k-gram of the normalized text at its 1-based position
+    grams = (word_ngram_rows(ensure_parallelism(df), tokens(text_col), k,
+                             (id_col,))
+             .select(F.col(id_col).alias("doc_id"), "pos",
+                     F.substring(F.md5("gram"), 1, 16).alias("ghash")))
     # min over the w-window STARTING at this gram; only positions with a
     # full window ahead open one (windows = n_grams - w + 1 per doc)
     win = (Window.partitionBy("doc_id").orderBy("pos")

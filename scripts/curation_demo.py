@@ -106,14 +106,14 @@ def _web_ingest(spark, docs, crawl_dir: str):
 
 
 def run(spark, sf_dir: str, out_dir: str) -> dict:
-    from etl_mark1_spark.functions.text import gopher_quality_flags
+    from etl_mark1_spark.functions.grams import tokens, word_ngram_rows
+    from etl_mark1_spark.functions.text import (gopher_quality_flags,
+                                                normalized_text)
     from etl_mark1_spark.operators.bloom import bloom_semi_filter
     from etl_mark1_spark.operators.bpe import bpe_segment, bpe_train
     from etl_mark1_spark.operators.corpus import (pack_sequences, redact_pii,
                                                   temperature_mixture)
-    from etl_mark1_spark.operators.dedup import (dedup_keep_best,
-                                                 minhash_dedup, word_ngrams)
-    from etl_mark1_spark.functions.text import normalized_text
+    from etl_mark1_spark.operators.dedup import dedup_keep_best, minhash_dedup
     from etl_mark1_spark.plans.quality import ks_drift, pii_scan
     from etl_mark1_spark.sources.versioned import (tag_version, write_version)
 
@@ -164,9 +164,7 @@ def run(spark, sf_dir: str, out_dir: str) -> dict:
     stages["near_dedup"] = near.count()
 
     # 4. decontamination vs the src0 'benchmark' slice (Bloom prescreen)
-    grams = near.select(
-        "doc_id", "source",
-        F.explode(word_ngrams(F.col("text"), 6)).alias("gram"))
+    grams = word_ngram_rows(near, tokens("text"), 6, ("doc_id", "source"))
     ref = grams.filter(F.col("source") == "src0").select("gram").distinct()
     corpus_grams = grams.filter(F.col("source") != "src0")
     hits = bloom_semi_filter(corpus_grams, ref, "gram") \

@@ -26,6 +26,12 @@ the same surface tests/test_plans.py pins for individual entries):
   and relies on the allowlist for the aggregate-bounded cases.
 - SCAN_WIDTH: every parquet scan's ReadSchema column count vs the table
   width — a full-width scan for a narrow projection means pruning broke.
+- HOF_UNBOUND: a ``lambdafunction`` body that applies ``regexp_replace``/
+  ``split``/``lower`` to a non-lambda attribute. Higher-order functions
+  evaluate their body per element without common-subexpression
+  elimination, so such a body re-tokenizes the whole row once per
+  element (O(len^2) per row); bind the input once outside the lambda
+  (functions/grams.py:bind_once) or explode instead.
 
 Known-bounded exceptions are ALLOWLISTED inline with the reason; a new
 hit on a non-allowlisted entry exits non-zero so the sweep can gate.
@@ -132,6 +138,37 @@ TABLE_WIDTHS = {
 }
 
 
+#: a plan attribute reference that is not a lambda variable
+#: (``text#12``, not ``lambda x_3#12``)
+_ATTR = re.compile(r"(?<!lambda )\b[A-Za-z_]\w*#\d+")
+_ROW_FUNCS = re.compile(r"\b(?:regexp_replace|split|lower)\(")
+
+
+def _inner(text: str, start: int) -> str | None:
+    """The text up to the parenthesis closing the one at ``start - 1``;
+    None when it does not close (the plan printer truncates long
+    expressions with "...")."""
+    depth, i = 1, start
+    while i < len(text) and depth:
+        depth += {"(": 1, ")": -1}.get(text[i], 0)
+        i += 1
+    return None if depth else text[start:i - 1]
+
+
+def hof_unbound(plan: str) -> str | None:
+    """The first whole-row function call inside a lambda body that reads
+    a non-lambda attribute, or None. Every plan node prints on one line,
+    so expressions are matched line by line."""
+    for line in plan.splitlines():
+        for lam in re.finditer(r"lambdafunction\(", line):
+            body = _inner(line, lam.end()) or ""
+            for call in _ROW_FUNCS.finditer(body):
+                args = _inner(body, call.end())
+                if args and _ATTR.search(args):
+                    return f"{call.group(0)}{args}"[:80]
+    return None
+
+
 def audit_one(name: str, plan: str) -> list[tuple[str, str]]:
     findings: list[tuple[str, str]] = []
     if "CartesianProduct" in plan:
@@ -149,6 +186,9 @@ def audit_one(name: str, plan: str) -> list[tuple[str, str]]:
                 "specifiedwindowframe")) and name not in GLOBAL_WINDOW_OK:
             findings.append(("GLOBAL_WINDOW", f"empty partitionBy: {spec[:80]}"))
             break
+    unbound = hof_unbound(plan)
+    if unbound:
+        findings.append(("HOF_UNBOUND", f"per-element {unbound}"))
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
         ncols = len([c for c in m.group(1).split(",") if ":" in c])
         # find which table this scan reads from the preceding Location line
@@ -201,7 +241,8 @@ def main() -> int:
             "",
             "Checks: CartesianProduct, row-at-a-time Python UDFs, "
             "non-allowlisted global sorts, non-allowlisted "
-            "empty-partition windows, full-width scans of wide tables. "
+            "empty-partition windows, full-width scans of wide tables, "
+            "whole-row tokenization inside higher-order lambdas. "
             "Allowlists (with per-entry reasons) live in the script; "
             "every allowlisted case is an aggregate-bounded frame or an "
             "operator whose contract IS the ordering.",

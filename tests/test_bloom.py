@@ -107,7 +107,7 @@ def test_planted_contamination_found_exactly(spark):
     bench = spark.createDataFrame([(999, bench_text, "bench")],
                                   ["doc_id", "text", "source"])
 
-    from etl_mark1_spark.operators.dedup import word_ngrams
+    from etl_mark1_spark.functions.grams import word_ngrams
     grams = lambda df: df.select(  # noqa: E731
         "doc_id", F.explode(word_ngrams(F.col("text"), 6)).alias("gram"))
     hits = bloom_semi_filter(grams(docs), grams(bench).select("gram"), "gram")

@@ -1,18 +1,24 @@
 """Dedup family + similarity search semantics on controlled fixtures."""
 
+import re
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from etl_mark1_spark.operators.dedup import (
+from etl_mark1_spark.functions.grams import (
     char_shingles,
+    tokens,
+    word_ngram_rows,
+    word_ngrams,
+)
+from etl_mark1_spark.operators.dedup import (
     dedup_exact,
     embedding_neardup,
     jaccard,
     minhash_dedup,
     simhash_dedup,
     with_simhash,
-    word_ngrams,
 )
 from etl_mark1_spark.operators.similarity import (
     cosine_topk,
@@ -58,6 +64,46 @@ def test_word_ngrams(spark):
     df = spark.createDataFrame([Row(t="a b c d")])
     grams = df.select(word_ngrams(F.col("t"), 2).alias("g")).first().g
     assert set(grams) == {"a b", "b c", "c d"}
+
+
+#: empty, whitespace-only, tabs/newlines, < n, exactly n, non-ASCII
+_GRAM_TEXTS = ["", "   ", "a\tb\nc  d", "x y", "p q r",
+               "Ünï  straße\t東京 ok"]
+
+
+def _ref_grams(text, tokenizer, n, short):
+    """Plain-Python gram multiset of one text."""
+    if tokenizer == "normalized":
+        toks = re.sub(r"\s+", " ", text).strip(" ").lower().split(" ")
+    else:
+        toks = [t for t in re.split(r"\s+", text.lower()) if t]
+    if len(toks) < n:
+        return [" ".join(toks)] if short == "truncate" else []
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
+@pytest.mark.parametrize("short", ["truncate", "none"])
+@pytest.mark.parametrize("n", [1, 2, 3])
+@pytest.mark.parametrize("tokenizer", ["normalized", "lower_ws"])
+def test_word_ngrams_array_and_rows_agree(spark, tokenizer, n, short):
+    """The array gram builder emits the reference per-document gram
+    multiset for every (tokenizer, n, short-document policy), and the row
+    builder (which emits no gram for short documents) matches its
+    ``"none"`` policy."""
+    df = spark.createDataFrame(list(enumerate(_GRAM_TEXTS)), ["id", "t"])
+    arr = (df.select("id", F.explode(
+        word_ngrams("t", n, tokenizer, short)).alias("gram")).collect())
+    want = sorted((i, g) for i, t in enumerate(_GRAM_TEXTS)
+                  for g in _ref_grams(t, tokenizer, n, short))
+    assert sorted((r.id, r.gram) for r in arr) == want
+    if short == "truncate":
+        return
+    rows = word_ngram_rows(df, tokens("t", tokenizer), n, ("id",)).collect()
+    assert sorted((r.id, r.gram) for r in rows) == want
+    # positions are the 1-based gram starts, in order
+    for i in range(len(_GRAM_TEXTS)):
+        assert sorted(r.pos for r in rows if r.id == i) == list(
+            range(1, 1 + sum(1 for j, _ in want if j == i)))
 
 
 def test_minhash_dedup_clusters(docs):
