@@ -13,14 +13,17 @@ compilation amortizes to zero at the 100 TB design point, so steady-state
 is the number that predicts cluster behavior. Set SPARK_GRAFT_NO_WARMUP=1
 for single-run cold numbers.
 
-ISOLATION: each query runs in its OWN subprocess (fresh JVM + session).
-Sharing one session across ~20 plans was measured to pollute later
-entries — accumulated code-cache/C2 churn and storage blocks inflated
-recorded times up to 7x over a fresh-session run of the same query
-(round-2 artifact: minhash 36.4 s shared vs 5.1 s isolated). Per-query
-JVM startup costs wall-clock but never lands in the timings, and the
-numbers become reproducible run-over-run. Set SPARK_GRAFT_SHARED_SESSION=1
-to get the old one-session behavior for quick local iteration.
+ISOLATION: each query runs in its OWN subprocess (fresh JVM + session),
+so no entry inherits another's storage blocks or JIT state. Per-query
+JVM startup costs wall-clock but never lands in the timings. The one
+shared-session cost that was ever measured as large (round 2: minhash
+36.4 s shared vs 5.1 s isolated) no longer shows: at sf0.01 on 4 cores,
+minhash timed 1.9-2.0 s after the six entries before it in one session
+and 2.2-2.4 s alone. A session that runs many plans keeps their
+generated code because the codegen cache is sized for it (see the
+spark.sql.codegen.cache.maxEntries comment in etl_mark1_spark/session.py);
+the spread line's "compiles" map shows any entry that still compiles
+during its timed runs.
 
 SPREAD: after the compile warmup, each query is timed SPARK_GRAFT_RUNS
 (default 3) times in its subprocess; "queries" carries the MIN (see
@@ -212,9 +215,11 @@ def run_query(spark, name: str, sf_dir: str) -> float:
     return time.monotonic() - started
 
 
-def time_in_session(spark, name: str, sf_dir: str) -> list[float]:
+def time_in_session(spark, name: str,
+                    sf_dir: str) -> tuple[list[float], int]:
     """Warmup (compile) pass, then SPARK_GRAFT_RUNS timed steady-state
     runs — the spread across them is the in-artifact load-noise record.
+    Returns the run times and the classes compiled during them.
 
     SUB-SECOND entries keep sampling up to SPARK_GRAFT_RUNS_FAST total
     runs (default 8): at 3 timed runs their min still rides scheduler
@@ -223,14 +228,17 @@ def time_in_session(spark, name: str, sf_dir: str) -> list[float]:
     declined monotonically to their prior-round floors by run ~8). The
     extra runs are by definition cheap — an entry pays them only while
     its best time is under a second."""
+    from etl_mark1_spark.session import codegen_compiles
+
     if not os.environ.get("SPARK_GRAFT_NO_WARMUP"):
         run_query(spark, name, sf_dir)  # compile pass; steady-state is timed
+    compiled = codegen_compiles(spark)
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_RUNS", "3")))
     n_fast = max(n_runs, int(os.environ.get("SPARK_GRAFT_RUNS_FAST", "8")))
     runs = [round(run_query(spark, name, sf_dir), 3) for _ in range(n_runs)]
     while min(runs) < 1.0 and len(runs) < n_fast:
         runs.append(round(run_query(spark, name, sf_dir), 3))
-    return runs
+    return runs, codegen_compiles(spark) - compiled
 
 
 def _best(runs: list[float]) -> float:
@@ -252,12 +260,16 @@ def child_main(name: str, sf_dir: str) -> None:
 
     spark = get_spark(app_name=f"bench-{name}", driver_memory="24g")
     spark.range(1).count()  # absorb JVM startup outside the timings
-    runs = time_in_session(spark, name, sf_dir)
-    print(json.dumps({"query": name, "sec": _best(runs), "runs": runs}))
+    runs, compiles = time_in_session(spark, name, sf_dir)
+    print(json.dumps({"query": name, "sec": _best(runs), "runs": runs,
+                      "compiles": compiles}))
     spark.stop()
 
 
-def time_isolated(name: str, sf_dir: str) -> tuple[float, list[float]] | None:
+def time_isolated(name: str,
+                  sf_dir: str) -> tuple[float, list[float], int] | None:
+    """(min, timed runs, classes compiled during them) of one entry in
+    its own subprocess, or None when it failed."""
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--one", name],
         capture_output=True, text=True,
@@ -271,7 +283,7 @@ def time_isolated(name: str, sf_dir: str) -> tuple[float, list[float]] | None:
     for line in reversed(proc.stdout.strip().splitlines()):
         try:
             rec = json.loads(line)
-            return rec["sec"], rec.get("runs", [rec["sec"]])
+            return rec["sec"], rec["runs"], rec["compiles"]
         except (json.JSONDecodeError, KeyError):
             continue
     sys.stderr.write(f"bench error in {name}:\n{proc.stderr[-2000:]}\n")
@@ -287,31 +299,15 @@ def main() -> None:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     timings: dict[str, float | None] = {}
     spread: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
     calib_start = [calibration_probe() for _ in range(3)]
     calib_mt_start = [calibration_probe_mt() for _ in range(3)]
-    if os.environ.get("SPARK_GRAFT_SHARED_SESSION"):
-        from etl_mark1_spark import get_spark
-
-        # code-cache sizing for this generated-code-heavy workload lives in
-        # get_spark's defaults (session.py)
-        spark = get_spark(app_name="bench", driver_memory="24g")
-        spark.range(1).count()
-        for name in HEADLINE:
-            try:
-                runs = time_in_session(spark, name, sf_dir)
-                timings[name] = _best(runs)
-                spread[name] = runs
-            except Exception as exc:  # broken query shows as null, not a crash
-                print(f"bench error in {name}: {exc}", file=sys.stderr)
-                timings[name] = None
-        spark.stop()
-    else:
-        for name in HEADLINE:
-            got = time_isolated(name, sf_dir)
-            if got is None:
-                timings[name] = None
-            else:
-                timings[name], spread[name] = got
+    for name in HEADLINE:
+        got = time_isolated(name, sf_dir)
+        if got is None:
+            timings[name] = None
+        else:
+            timings[name], spread[name], compiles[name] = got
 
     calib_end = [calibration_probe() for _ in range(3)]
     calib_mt_end = [calibration_probe_mt() for _ in range(3)]
@@ -322,7 +318,10 @@ def main() -> None:
     # entries the combined line outgrew that window (round-4 artifact:
     # "parsed": null), so spread is now a separate line and the FINAL line
     # stays a compact medians-only record, well under the capture window.
+    # "compiles" counts the classes each entry compiled during its timed
+    # runs: nonzero means a timing includes codegen (see time_in_session).
     print(json.dumps({"spread": spread,
+                      "compiles": compiles,
                       "calibration_runs": {"start": calib_start,
                                            "end": calib_end,
                                            "mt_start": calib_mt_start,

@@ -366,13 +366,14 @@ def index_ingest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from etl_mark1_spark.operators.indexing import write_search_index
+    from etl_mark1_spark.operators.indexing import (read_artifact,
+                                                    write_search_index)
 
     while _INGEST_SCRATCH:
         shutil.rmtree(_INGEST_SCRATCH.pop(), ignore_errors=True)
     path = tempfile.mkdtemp(prefix="etl_mark1_ingest_")
     _INGEST_SCRATCH.append(path)
     write_search_index(t(spark, sf_dir, "documents"), path)
-    return (spark.read.parquet(path + "/stats")
+    return (read_artifact(spark, path, "stats")
             .agg(F.sum("n_docs").cast("bigint").alias("n_docs"),
                  F.sum("sum_dl").cast("bigint").alias("sum_dl")))

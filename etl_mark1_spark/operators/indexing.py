@@ -39,6 +39,45 @@ from etl_mark1_spark.functions.grams import word_ngram_rows
 #: FUNCTION OF THE TOKEN, so merged/incremental segments align for free).
 DEFAULT_BUCKETS = 64
 
+#: The columns of each artifact of a persisted search index
+#: (:func:`write_search_index`, :func:`write_position_index`,
+#: :func:`delete_from_index`), declared once beside the writers. Each
+#: writer casts to them (so ``doc_id`` is ``bigint`` whatever the
+#: input's id type) and :func:`read_artifact` reads with them, so
+#: opening an artifact launches no schema-inference job. Partition
+#: columns (``bucket``, and ``seg`` in the streaming layout) are not
+#: named: the reader discovers them from the directory names.
+ARTIFACT_COLUMNS = {
+    "postings": (("token", "string"), ("doc_id", "bigint"),
+                 ("tf", "bigint"), ("dl", "bigint")),
+    "stats": (("n_docs", "bigint"), ("sum_dl", "bigint")),
+    "dict": (("token", "string"), ("df", "bigint"), ("max_tf", "bigint"),
+             ("min_dl", "bigint")),
+    "deletes": (("doc_id", "bigint"), ("dl", "bigint")),
+    "positions": (("token", "string"), ("doc_id", "bigint"),
+                  ("positions", "array<bigint>")),
+}
+
+
+def _as_artifact(df: DataFrame, part: str) -> DataFrame:
+    """``df``'s columns of artifact ``part``, cast to their declared
+    types — what every artifact writer persists."""
+    return df.select(*[F.col(c).cast(t) for c, t in ARTIFACT_COLUMNS[part]])
+
+
+def read_artifact(spark, path: str, part: str) -> DataFrame:
+    """Artifact ``part`` of the search index at ``path``, read with its
+    declared schema. A missing artifact still raises
+    ``AnalysisException``."""
+    ddl = ", ".join(f"{c} {t}" for c, t in ARTIFACT_COLUMNS[part])
+    return spark.read.schema(ddl).parquet(f"{path.rstrip('/')}/{part}")
+
+
+def _exists(spark, path: str) -> bool:
+    """Whether ``path`` exists, by one Hadoop ``FileSystem`` call."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
 
 def token_bucket(col: Column, num_buckets: int = DEFAULT_BUCKETS) -> Column:
     """Deterministic [0, num_buckets) bucket from the md5 of the token —
@@ -275,7 +314,8 @@ def write_search_index(df: DataFrame, path: str,
     base = path.rstrip("/")
 
     def _postings() -> None:
-        (build_scored_postings(df, text_col=text_col, id_col=id_col)
+        (_as_artifact(build_scored_postings(df, text_col=text_col,
+                                            id_col=id_col), "postings")
          .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
          .hint("rebalance", "bucket")
          .write.mode("append").partitionBy("bucket")
@@ -285,16 +325,17 @@ def write_search_index(df: DataFrame, path: str,
         (df.select(F.size(_doc_tokens(text_col)).cast("bigint")
                    .alias("_dl"))
          .filter(F.col("_dl") > 0)
-         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-              F.sum("_dl").cast("bigint").alias("sum_dl"))
+         .agg(F.count(F.lit(1)).alias("n_docs"),
+              F.sum("_dl").alias("sum_dl"))
+         .transform(_as_artifact, "stats")
          .write.mode("append").parquet(base + "/stats"))
 
     def _dict() -> None:
         (build_scored_postings(df, text_col=text_col, id_col=id_col)
          .groupBy("token")
-         .agg(F.count(F.lit(1)).cast("bigint").alias("df"),
-              F.max("tf").cast("bigint").alias("max_tf"),
-              F.min("dl").cast("bigint").alias("min_dl"))
+         .agg(F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf"),
+              F.min("dl").alias("min_dl"))
+         .transform(_as_artifact, "dict")
          .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
          .hint("rebalance", "bucket")
          .write.mode("append").partitionBy("bucket")
@@ -306,17 +347,14 @@ def write_search_index(df: DataFrame, path: str,
 
 
 def _read_tombstones(spark, base: str) -> DataFrame | None:
-    """The index's deduplicated tombstone set (doc_id, dl) from
+    """The index's raw tombstone rows (doc_id, dl) from
     ``<base>/deletes``, or None when no delete was ever issued (the
-    deletes path does not exist). Dedup at read (groupBy + first) makes
-    a double delete of the same document harmless."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        raw = spark.read.parquet(base + "/deletes")
-    except AnalysisException:
+    deletes path does not exist). A double delete leaves a duplicate
+    id: the readers' left anti-joins give the same result with it, and
+    :func:`_corrected_index_stats` deduplicates on the driver."""
+    if not _exists(spark, base + "/deletes"):
         return None
-    return raw.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+    return read_artifact(spark, base, "deletes")
 
 
 def _corrected_index_stats(
@@ -326,32 +364,43 @@ def _corrected_index_stats(
     with the stats sums corrected for tombstoned documents — tombstones
     carry the deleted doc's dl exactly so both corrections are
     algebraic (no corpus rescan at query time). Raises a clear
-    ValueError on an empty (or fully-deleted) index."""
-    stats = (spark.read.parquet(base + "/stats")
-             .agg(F.sum("n_docs").alias("_n"), F.sum("sum_dl").alias("_s"))
-             .head())
+    ValueError on an empty (or fully-deleted) index.
+
+    One action fetches the stats rows (one per segment, doc_id NULL)
+    and the raw tombstone rows together; the tombstones deduplicate on
+    the driver. Both are bounded: by the segment count, and by the
+    tombstone set every query already broadcasts."""
+    base = base.rstrip("/")
+    tomb = _read_tombstones(spark, base)
+    rows = read_artifact(spark, base, "stats").select(
+        F.lit(None).cast("bigint").alias("doc_id"), "n_docs",
+        F.col("sum_dl").alias("dl"))
+    if tomb is not None:
+        rows = rows.unionByName(
+            tomb.select("doc_id", F.lit(None).cast("bigint").alias("n_docs"),
+                        "dl"))
+    n_docs = sum_dl = 0
+    dead: dict[int, int] = {}
+    for r in rows.collect():
+        if r["doc_id"] is None:
+            n_docs += r["n_docs"]
+            sum_dl += r["dl"] or 0  # NULL for a batch of empty texts
+        else:
+            dead.setdefault(r["doc_id"], r["dl"])
     # guard the degenerate index: every ingested batch held only
-    # empty-text documents, so the stats rows sum to 0/NULL and the
-    # int(None) below would be an opaque TypeError (round-12 ADVICE fix;
-    # pinned in tests/test_indexing.py)
-    if stats["_n"] is None or int(stats["_n"]) == 0:
+    # empty-text documents, so the stats rows sum to 0 (round-12 ADVICE
+    # fix; pinned in tests/test_indexing.py)
+    if n_docs == 0:
         raise ValueError(
             f"index at {path_for_errors!r} contains no documents "
             "(all ingested batches were empty or empty-text)")
-    n_docs, sum_dl = int(stats["_n"]), int(stats["_s"])
-    tomb = _read_tombstones(spark, base)
-    n_tomb = 0
-    if tomb is not None:
-        tstats = tomb.agg(F.count(F.lit(1)).alias("_n"),
-                          F.sum("dl").alias("_s")).head()
-        n_tomb = int(tstats["_n"])
-        n_docs -= n_tomb
-        sum_dl -= int(tstats["_s"] or 0)
-        if n_docs <= 0:
-            raise ValueError(
-                f"index at {path_for_errors!r} has no surviving documents "
-                "(every indexed document is tombstoned; compact or rebuild)")
-    return n_docs, sum_dl, float(sum_dl) / float(n_docs), tomb, n_tomb
+    n_docs -= len(dead)
+    sum_dl -= sum(dead.values())
+    if n_docs <= 0:
+        raise ValueError(
+            f"index at {path_for_errors!r} has no surviving documents "
+            "(every indexed document is tombstoned; compact or rebuild)")
+    return n_docs, sum_dl, float(sum_dl) / float(n_docs), tomb, len(dead)
 
 
 def _scored_bm25_unordered(postings: DataFrame, n_docs: int, avgdl: float,
@@ -417,7 +466,7 @@ def bm25_search_persisted(spark, path: str, query_terms: list[str],
     surviving pruned postings."""
     base = path.rstrip("/")
     n_docs, _, avgdl, tomb, _ = _corrected_index_stats(spark, base, path)
-    postings = lookup_terms(spark.read.parquet(base + "/postings"),
+    postings = lookup_terms(read_artifact(spark, base, "postings"),
                             query_terms, num_buckets)
     if tomb is not None:
         postings = postings.join(F.broadcast(tomb.select("doc_id")),
@@ -434,7 +483,7 @@ def read_search_postings(spark, path: str, terms: list[str],
     :func:`_score_postings_bm25`, or any postings consumer — deletion
     awareness comes for free."""
     base = path.rstrip("/")
-    postings = lookup_terms(spark.read.parquet(base + "/postings"),
+    postings = lookup_terms(read_artifact(spark, base, "postings"),
                             terms, num_buckets)
     tomb = _read_tombstones(spark, base)
     if tomb is not None:
@@ -493,7 +542,7 @@ def delete_from_index(spark, path: str,
     time); when deletions grow corpus-scale, run :func:`compact_index`
     — which also resets query cost to the no-tombstone path."""
     base = path.rstrip("/")
-    postings = spark.read.parquet(base + "/postings")
+    postings = read_artifact(spark, base, "postings")
     if isinstance(doc_ids, DataFrame):
         matched = postings.join(
             F.broadcast(doc_ids.select("doc_id").distinct()), "doc_id")
@@ -502,8 +551,8 @@ def delete_from_index(spark, path: str,
         if not ids:
             raise ValueError("delete_from_index needs at least one doc_id")
         matched = postings.filter(F.col("doc_id").isin(ids))
-    (matched.groupBy("doc_id")
-     .agg(F.first("dl").cast("bigint").alias("dl"))
+    (matched.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+     .transform(_as_artifact, "deletes")
      .write.mode("append").parquet(base + "/deletes"))
 
 
@@ -524,11 +573,9 @@ def compact_index(spark, path: str, dest: str,
     in-place rewrite would race concurrent readers). The positional
     postings (``<path>/positions``, if present) compact in the same
     pass."""
-    from pyspark.errors import AnalysisException
-
     base, out = path.rstrip("/"), dest.rstrip("/")
     tomb = _read_tombstones(spark, base)
-    postings = spark.read.parquet(base + "/postings") \
+    postings = read_artifact(spark, base, "postings") \
         .select("token", "doc_id", "tf", "dl")
     if tomb is not None:
         ids = F.broadcast(tomb.select("doc_id"))
@@ -548,26 +595,26 @@ def compact_index(spark, path: str, dest: str,
 
     def _stats() -> None:
         (postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-              F.sum("dl").cast("bigint").alias("sum_dl"))
+         .agg(F.count(F.lit(1)).alias("n_docs"),
+              F.sum("dl").alias("sum_dl"))
+         .transform(_as_artifact, "stats")
          .write.mode("overwrite").parquet(out + "/stats"))
 
     def _dict() -> None:
         (postings.groupBy("token")
-         .agg(F.count(F.lit(1)).cast("bigint").alias("df"),
-              F.max("tf").cast("bigint").alias("max_tf"),
-              F.min("dl").cast("bigint").alias("min_dl"))
+         .agg(F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf"),
+              F.min("dl").alias("min_dl"))
+         .transform(_as_artifact, "dict")
          .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
          .hint("rebalance", "bucket")
          .write.mode("overwrite").partitionBy("bucket")
          .parquet(out + "/dict"))
 
     def _positions() -> None:
-        try:
-            pos = spark.read.parquet(base + "/positions") \
-                .select("token", "doc_id", "positions")
-        except AnalysisException:
+        if not _exists(spark, base + "/positions"):
             return  # no positional segment to compact
+        pos = read_artifact(spark, base, "positions") \
+            .select("token", "doc_id", "positions")
         if tomb is not None:
             pos = pos.join(F.broadcast(tomb.select("doc_id")),
                            "doc_id", "left_anti")
@@ -634,7 +681,7 @@ def bm25_maxscore_search(spark, path: str, query_terms: list[str],
     base = path.rstrip("/")
     n_docs, _, avgdl, tomb, n_tomb = _corrected_index_stats(spark, base, path)
     schema = "doc_id bigint, bm25 double"
-    dict_rows = (lookup_terms(spark.read.parquet(base + "/dict"),
+    dict_rows = (lookup_terms(read_artifact(spark, base, "dict"),
                               query_terms, num_buckets)
                  .groupBy("token")
                  .agg(F.sum("df").alias("df"),
@@ -654,7 +701,7 @@ def bm25_maxscore_search(spark, path: str, query_terms: list[str],
                       + k1 * (1 - b + b * int(r["min_dl"]) / avgdl)))
         ubs.append((r["token"], idf_ub * norm_ub))
     ubs.sort(key=lambda x: (-x[1], x[0]))
-    postings = lookup_terms(spark.read.parquet(base + "/postings"),
+    postings = lookup_terms(read_artifact(spark, base, "postings"),
                             query_terms, num_buckets)
     if tomb is not None:
         postings = postings.join(F.broadcast(tomb.select("doc_id")),
@@ -759,7 +806,8 @@ def write_position_index(df: DataFrame, path: str,
               .select("doc_id", F.explode(entries).alias("_e"))
               .select(F.col("_e.token").alias("token"), "doc_id",
                       F.col("_e.positions").alias("positions")))
-    (rolled.withColumn("bucket", token_bucket(F.col("token"), num_buckets))
+    (_as_artifact(rolled, "positions")
+     .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
      .hint("rebalance", "bucket")
      .write.mode("append").partitionBy("bucket")
      .parquet(path.rstrip("/") + "/positions"))
@@ -775,7 +823,7 @@ def read_position_postings(spark, path: str, terms: list[str],
     :func:`best_window` run UNCHANGED against the persisted form
     (parity pinned in tests/test_indexing.py)."""
     base = path.rstrip("/")
-    rolled = lookup_terms(spark.read.parquet(base + "/positions"),
+    rolled = lookup_terms(read_artifact(spark, base, "positions"),
                           terms, num_buckets)
     tomb = _read_tombstones(spark, base)
     if tomb is not None:
@@ -834,7 +882,8 @@ def write_search_index_segment(df: DataFrame, path: str, seg: str,
     base = path.rstrip("/")
 
     def _postings() -> None:
-        (build_scored_postings(df, text_col=text_col, id_col=id_col)
+        (_as_artifact(build_scored_postings(df, text_col=text_col,
+                                            id_col=id_col), "postings")
          .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
          .withColumn("seg", F.lit(seg))
          .hint("rebalance", "bucket")
@@ -846,8 +895,9 @@ def write_search_index_segment(df: DataFrame, path: str, seg: str,
         (df.select(F.size(_doc_tokens(text_col)).cast("bigint")
                    .alias("_dl"))
          .filter(F.col("_dl") > 0)
-         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-              F.sum("_dl").cast("bigint").alias("sum_dl"))
+         .agg(F.count(F.lit(1)).alias("n_docs"),
+              F.sum("_dl").alias("sum_dl"))
+         .transform(_as_artifact, "stats")
          .withColumn("seg", F.lit(seg))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
@@ -856,9 +906,9 @@ def write_search_index_segment(df: DataFrame, path: str, seg: str,
     def _dict() -> None:
         (build_scored_postings(df, text_col=text_col, id_col=id_col)
          .groupBy("token")
-         .agg(F.count(F.lit(1)).cast("bigint").alias("df"),
-              F.max("tf").cast("bigint").alias("max_tf"),
-              F.min("dl").cast("bigint").alias("min_dl"))
+         .agg(F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf"),
+              F.min("dl").alias("min_dl"))
+         .transform(_as_artifact, "dict")
          .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
          .withColumn("seg", F.lit(seg))
          .hint("rebalance", "bucket")

@@ -55,6 +55,7 @@ from etl_mark1_spark.operators.indexing import (
     _corrected_index_stats,
     _score_postings_bm25,
     _scored_bm25_unordered,
+    read_artifact,
     read_search_postings,
 )
 
@@ -82,7 +83,7 @@ def _read_dict(spark, path: str) -> DataFrame:
     callers here use only for ranking candidates / expansion caps,
     never for score arithmetic (scoring paths recount df from the
     surviving pruned postings)."""
-    return (spark.read.parquet(path.rstrip("/") + "/dict")
+    return (read_artifact(spark, path, "dict")
             .groupBy("token")
             .agg(F.sum("df").cast("bigint").alias("df")))
 
@@ -229,7 +230,7 @@ def more_like_this_persisted(spark, path: str, doc_id: int,
     ``diagnostics`` to receive the selected seed terms (same
     convention as bm25_maxscore_search)."""
     n_docs, _, avgdl, _, _ = _corrected_index_stats(spark, path, path)
-    seed = (spark.read.parquet(path.rstrip("/") + "/postings")
+    seed = (read_artifact(spark, path, "postings")
             .filter(F.col("doc_id") == int(doc_id))
             .select("token", "tf"))
     weighted = (seed.join(_read_dict(spark, path), "token")
@@ -285,7 +286,7 @@ def prf_search_persisted(spark, path: str, terms: Sequence[str],
     fb_ids = [int(r["doc_id"]) for r in first.collect()]
     if not fb_ids:
         return spark.createDataFrame([], "doc_id bigint, bm25 double")
-    fb_post = (spark.read.parquet(path.rstrip("/") + "/postings")
+    fb_post = (read_artifact(spark, path, "postings")
                .filter(F.col("doc_id").isin(fb_ids))
                .groupBy("token")
                .agg(F.sum("tf").cast("bigint").alias("_stf")))

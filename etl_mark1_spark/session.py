@@ -51,6 +51,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # Generated-code class cache (static; Spark's default holds 100).
+        # It is LRU, and one round of each perfbench workload cycles
+        # through more classes than that: 156 for text_curation (five
+        # gram entries + one DAG run) and 109 for index_lifecycle (ingest,
+        # delete, four persisted query kinds, compact; 148 with the index
+        # build). At 100 every class was evicted before its next use, so
+        # each round recompiled 106-143 classes, each then re-JITted by
+        # C2. At 1000 a repeated op compiles only where a literal changed
+        # (text_curation 10 per round, index_lifecycle 14-18); local[4].
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # 512m code cache (JDK default 240m): a session that executes many
         # distinct plans accumulates whole-stage-codegen classes until C2
         # compilation stalls — measured as 2-7x first-run inflation on
@@ -73,3 +83,10 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the session's JVM has compiled from generated code so far
+    (Spark's CodegenMetrics; a codegen-cache hit compiles nothing)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -224,7 +224,7 @@ def main() -> None:
                 entries[sf_label][name] = None
                 print(f"FAIL  {name} @ {sf_label}", flush=True)
                 continue
-            sec, runs = got
+            sec, runs, _ = got
             entries[sf_label][name] = {"sec": sec, "runs": runs}
             print(f"{sf_label:6} {name}: {sec}s {runs}", flush=True)
 

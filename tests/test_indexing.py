@@ -884,6 +884,108 @@ def test_index_ingest_sink_two_drains_and_replay(spark, tmp_path):
     assert got == want
 
 
+# -- declared artifact schemas and the per-query job budget ------------------
+
+def _job_stages(spark, run):
+    """The first stage name of each job ``run()`` launches, in job order
+    (a job group scopes the jobs to this call)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    names = []
+    for job in sorted(tracker.getJobIdsForGroup(group)):
+        stages = [tracker.getStageInfo(s)
+                  for s in sorted(tracker.getJobInfo(job).stageIds)]
+        names.append(next((s.name for s in stages if s), "?"))
+    return names
+
+
+def test_persisted_queries_stay_within_job_budget(spark, sf_dir, tmp_path):
+    """Opening a persisted index costs no job of its own: artifacts read
+    with declared schemas (no schema-inference job), and the stats and
+    tombstone rows come back in one action. Pins each query kind's job
+    count on a 2-segment, tombstoned index."""
+    from etl_mark1_spark.operators.indexing import (bm25_maxscore_search,
+                                                    bm25_search_persisted,
+                                                    delete_from_index,
+                                                    write_search_index)
+    from etl_mark1_spark.operators.retrieval import (prf_search_persisted,
+                                                     search_query_persisted)
+
+    path = str(tmp_path / "budget_idx")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    write_search_index(docs.filter(F.col("doc_id") % 2 == 0), path)
+    write_search_index(docs.filter(F.col("doc_id") % 2 == 1), path)
+    delete_from_index(spark, path, [0, 3, 8, 11])
+    delete_from_index(spark, path, [3, 21])  # a double delete
+    terms = ["dup", "the", "join"]
+    budget = {
+        "bm25": (6, lambda: bm25_search_persisted(spark, path, terms)),
+        "query_string": (11, lambda: search_query_persisted(
+            spark, path, "+dup the window -join")),
+        "maxscore": (13, lambda: bm25_maxscore_search(spark, path, terms)),
+        "prf": (16, lambda: prf_search_persisted(spark, path, ["dup"])),
+    }
+    for kind, (limit, query) in budget.items():
+        stages = _job_stages(spark, lambda: query().collect())
+        assert len(stages) <= limit, (kind, stages)
+        assert not any(s.startswith("parquet at") for s in stages), (
+            kind, stages)
+
+
+def test_index_artifacts_use_declared_schemas(spark, tmp_path):
+    """Writers cast to the declared artifact schemas (an int doc_id
+    persists as bigint), and the streaming ``seg`` layout reads through
+    the same schemas with its partition columns appended."""
+    from etl_mark1_spark.operators.corpus import bm25_topk
+    from etl_mark1_spark.operators.indexing import (
+        ARTIFACT_COLUMNS, bm25_search_persisted, delete_from_index,
+        phrase_search_persisted, read_artifact, write_position_index,
+        write_search_index, write_search_index_segment)
+
+    docs = spark.createDataFrame(DOCS, "doc_id int, text string")
+    flat, segs = str(tmp_path / "flat"), str(tmp_path / "segs")
+    write_search_index(docs, flat, num_buckets=8)
+    write_position_index(docs, flat, num_buckets=8)
+    delete_from_index(spark, flat, [1], num_buckets=8)
+    for part, cols in ARTIFACT_COLUMNS.items():
+        on_disk = spark.read.parquet(f"{flat}/{part}").schema
+        assert [(f.name, f.dataType.simpleString()) for f in on_disk
+                if f.name != "bucket"] == list(cols), part
+    got = [(r["doc_id"], r["bm25"]) for r in
+           bm25_search_persisted(spark, flat, ["lazy", "fox"], top_k=5,
+                                 num_buckets=8).collect()]
+    want = [(r["doc_id"], r["bm25"]) for r in
+            bm25_topk(_docs(spark).filter(F.col("doc_id") != 1),
+                      ["lazy", "fox"], top_k=5).collect()]
+    assert got == want
+    assert {r["doc_id"] for r in phrase_search_persisted(
+        spark, flat, ["lazy", "dog"], num_buckets=8).collect()} == {3}
+
+    write_search_index_segment(docs.filter(F.col("doc_id") <= 2), segs,
+                               seg="s0", num_buckets=8)
+    write_search_index_segment(docs.filter(F.col("doc_id") > 2), segs,
+                               seg="s1", num_buckets=8)
+    postings = read_artifact(spark, segs, "postings")
+    assert postings.columns == ["token", "doc_id", "tf", "dl", "bucket",
+                                "seg"]
+    assert sorted(r["seg"] for r in read_artifact(spark, segs, "stats")
+                  .collect()) == ["s0", "s1"]
+    got = [(r["doc_id"], r["bm25"]) for r in
+           bm25_search_persisted(spark, segs, ["lazy", "fox"], top_k=5,
+                                 num_buckets=8).collect()]
+    want = [(r["doc_id"], r["bm25"]) for r in
+            bm25_topk(_docs(spark), ["lazy", "fox"], top_k=5).collect()]
+    assert got == want
+
+
 def test_segment_report_hand_counted(spark):
     import hashlib
 
