@@ -213,25 +213,30 @@ def lookup_terms(index: DataFrame, terms: list[str],
 
     if not terms:
         raise ValueError("lookup_terms needs at least one term")
-    if all(t.isascii() for t in terms):
-        # ASCII fast path: Python str.lower() and Spark lower() agree,
-        # so the bucket computes driver-side with no job at all.
-        lowered = sorted({t.lower() for t in terms})
-    else:
-        # Non-ASCII terms fold through THE ENGINE's lower() — Python and
-        # the JVM disagree on Unicode edge cases ('İ' and friends), and a
-        # driver-side fold would hash to a bucket the index never wrote,
-        # silently returning no postings (round-12 ADVICE fix). One
-        # k-row local-relation job, k = |terms|.
-        spark = index.sparkSession
-        folded = (spark.createDataFrame([(x,) for x in terms],
-                                        "term string")
-                  .select(F.lower(F.col("term")).alias("tok")).collect())
-        lowered = sorted({r["tok"] for r in folded})
+    lowered = _fold_terms(index.sparkSession, terms)
     buckets = sorted({int(hashlib.md5(t.encode()).hexdigest()[:4], 16)
                       % num_buckets for t in lowered})
     return index.filter(F.col("bucket").isin(buckets)
                         & F.col("token").isin(lowered))
+
+
+def _fold_terms(spark, terms, ordered: bool = False) -> list[str]:
+    """Query terms case-folded the way the index tokenizer folded the
+    corpus (functions/text.py:normalized_text): sorted and
+    deduplicated, or with ``ordered=True`` in input order with repeats
+    (a phrase). ASCII folds driver-side, where Python's and Spark's
+    lower() agree. Non-ASCII terms fold through THE ENGINE's lower():
+    Python and the JVM disagree on Unicode edge cases ('İ' and
+    friends), and a driver-side fold would hash to a bucket the index
+    never wrote, silently returning no postings."""
+    terms = list(terms)
+    if all(t.isascii() for t in terms):
+        folded = [t.lower() for t in terms]
+    else:
+        folded = [r[0] for r in
+                  spark.createDataFrame([(t,) for t in terms], "term string")
+                  .select(F.lower(F.col("term"))).collect()]
+    return folded if ordered else sorted(set(folded))
 
 
 def build_scored_postings(df: DataFrame, text_col: str = "text",
@@ -270,6 +275,75 @@ def build_scored_postings(df: DataFrame, text_col: str = "text",
             .select("token", "doc_id", "tf", "dl"))
 
 
+def _ingest_parts(df: DataFrame, text_col: str,
+                  id_col: str) -> dict[str, DataFrame]:
+    """The three artifacts of one ingest batch, before the writer adds
+    the layout columns. The scored postings are built once and feed
+    both postings and dict; the stats row is a per-document token count
+    straight off the document frame."""
+    scored = build_scored_postings(df, text_col=text_col, id_col=id_col)
+    stats = (df.select(F.size(_doc_tokens(text_col)).cast("bigint")
+                       .alias("_dl"))
+             .filter(F.col("_dl") > 0)
+             .agg(F.count(F.lit(1)).alias("n_docs"),
+                  F.sum("_dl").alias("sum_dl")))
+    return {"postings": scored, "stats": stats, "dict": _dictionary(scored)}
+
+
+def _dictionary(postings: DataFrame) -> DataFrame:
+    """The dict artifact of a scored-postings frame: per-token
+    (df, max_tf, min_dl)."""
+    return (postings.groupBy("token")
+            .agg(F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf"),
+                 F.min("dl").alias("min_dl")))
+
+
+def _write_parts(parts: dict[str, DataFrame], base: str, num_buckets: int,
+                 mode: str, seg: str | None = None) -> None:
+    """Persist each artifact of ``parts`` under ``<base>/<part>``, cast
+    to its declared columns — the one writer of the search index's
+    on-disk layout.
+
+    * An artifact with a token column gets the md5 ``bucket`` partition
+      column and rebalances on it before the write (AQE sizes the
+      output files: a handful at fixture scale, split-sized at
+      production, never tasks x buckets).
+    * ``seg`` adds a ``seg`` partition column written with DYNAMIC
+      partition overwrite, so re-running the same (batch, seg)
+      replaces exactly its own partitions.
+    * The artifact writes are independent jobs and run from one thread
+      pool, so each job's straggler tail back-fills with the next
+      job's tasks. Every job inherits the caller's job group and
+      description."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def job(part: str, df: DataFrame):
+        def run() -> None:
+            out, keys = _as_artifact(df, part), []
+            if "token" in dict(ARTIFACT_COLUMNS[part]):
+                out = out.withColumn("bucket",
+                                     token_bucket(F.col("token"), num_buckets))
+                keys.append("bucket")
+            if seg is not None:
+                out = out.withColumn("seg", F.lit(seg))
+                keys.append("seg")
+            if "bucket" in keys:
+                out = out.hint("rebalance", "bucket")
+            writer = out.write.mode(mode)
+            if seg is not None:
+                writer = writer.option("partitionOverwriteMode", "dynamic")
+            if keys:
+                writer = writer.partitionBy(*keys)
+            writer.parquet(f"{base.rstrip('/')}/{part}")
+        return inheritable_thread_target(df.sparkSession)(run)
+
+    with ThreadPoolExecutor(max_workers=len(parts)) as pool:
+        for done in [pool.submit(job(p, df)) for p, df in parts.items()]:
+            done.result()  # re-raise the first failure
+
+
 def write_search_index(df: DataFrame, path: str,
                        text_col: str = "text", id_col: str = "doc_id",
                        num_buckets: int = DEFAULT_BUCKETS) -> None:
@@ -288,79 +362,42 @@ def write_search_index(df: DataFrame, path: str,
       into per-term score upper bounds (Turtle & Flood 1995 MaxScore)
       WITHOUT touching a posting list.
 
-    Round-13-opt ingest shape (was: three explode+groupBy+join
-    pipelines, ~2.6 s/segment + ~1 s dict at sf0.1):
-
-    * the scored postings are MAP-SIDE (:func:`build_scored_postings`)
-      — each recompute is a pure scan, so recomputing per artifact
-      (still the right call vs caching: a MEMORY_AND_DISK persist was
-      measured to make the first write 2-4x slower and never earn it
-      back) now costs a text scan, not two exchanges;
-    * the stats row never touches postings at all: n_docs/sum_dl are a
-      map-side per-doc token count + one global aggregate over the
-      document frame directly;
-    * postings and dict REBALANCE on the bucket before the partitioned
-      write (AQE sizes the output files adaptively — a handful of
-      files at fixture scale, split-sized at production — instead of
-      the old tasks x buckets fan-out; guide §6 small-files rule);
-    * the three artifact writes are independent jobs and run from a
-      small thread pool (guide §2.6): each job's straggler tail
-      back-fills with the next job's tasks.
-
-    Batches must be document-disjoint, like any segment write;
-    re-ingest belongs to a compaction pass (:func:`compact_index`)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    base = path.rstrip("/")
-
-    def _postings() -> None:
-        (_as_artifact(build_scored_postings(df, text_col=text_col,
-                                            id_col=id_col), "postings")
-         .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
-         .hint("rebalance", "bucket")
-         .write.mode("append").partitionBy("bucket")
-         .parquet(base + "/postings"))
-
-    def _stats() -> None:
-        (df.select(F.size(_doc_tokens(text_col)).cast("bigint")
-                   .alias("_dl"))
-         .filter(F.col("_dl") > 0)
-         .agg(F.count(F.lit(1)).alias("n_docs"),
-              F.sum("_dl").alias("sum_dl"))
-         .transform(_as_artifact, "stats")
-         .write.mode("append").parquet(base + "/stats"))
-
-    def _dict() -> None:
-        (build_scored_postings(df, text_col=text_col, id_col=id_col)
-         .groupBy("token")
-         .agg(F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf"),
-              F.min("dl").alias("min_dl"))
-         .transform(_as_artifact, "dict")
-         .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
-         .hint("rebalance", "bucket")
-         .write.mode("append").partitionBy("bucket")
-         .parquet(base + "/dict"))
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for done in [pool.submit(j) for j in (_postings, _stats, _dict)]:
-            done.result()  # re-raise the first failure
+    The scored postings are recomputed per artifact rather than cached
+    (a MEMORY_AND_DISK persist made the first write 2-4x slower and
+    never earned it back); they are map-side, so each recompute is a
+    text scan. Batches must be document-disjoint, like any segment
+    write; re-ingest belongs to a compaction pass
+    (:func:`compact_index`)."""
+    _write_parts(_ingest_parts(df, text_col, id_col), path, num_buckets,
+                 "append")
 
 
 def _read_tombstones(spark, base: str) -> DataFrame | None:
     """The index's raw tombstone rows (doc_id, dl) from
     ``<base>/deletes``, or None when no delete was ever issued (the
     deletes path does not exist). A double delete leaves a duplicate
-    id: the readers' left anti-joins give the same result with it, and
-    :func:`_corrected_index_stats` deduplicates on the driver."""
+    id: the left anti-join of :func:`_live` gives the same result with
+    it, and :func:`_corrected_index_stats` deduplicates on the
+    driver."""
     if not _exists(spark, base + "/deletes"):
         return None
     return read_artifact(spark, base, "deletes")
 
 
-def _corrected_index_stats(
-        spark, base: str, path_for_errors: str,
-) -> tuple[int, int, float, DataFrame | None, int]:
-    """(n_docs, sum_dl, avgdl, tombstones, n_tombstones) for a persisted index,
+def _live(spark, base: str, frame: DataFrame) -> DataFrame:
+    """``frame`` without the documents tombstoned in the index at
+    ``base`` — the one tombstone anti-join. The tombstone set is
+    takedown-sized and broadcasts."""
+    tomb = _read_tombstones(spark, base)
+    if tomb is None:
+        return frame
+    return frame.join(F.broadcast(tomb.select("doc_id")), "doc_id",
+                      "left_anti")
+
+
+def _corrected_index_stats(spark, path: str
+                           ) -> tuple[int, int, float, int]:
+    """(n_docs, sum_dl, avgdl, n_tombstones) for a persisted index,
     with the stats sums corrected for tombstoned documents — tombstones
     carry the deleted doc's dl exactly so both corrections are
     algebraic (no corpus rescan at query time). Raises a clear
@@ -370,7 +407,7 @@ def _corrected_index_stats(
     and the raw tombstone rows together; the tombstones deduplicate on
     the driver. Both are bounded: by the segment count, and by the
     tombstone set every query already broadcasts."""
-    base = base.rstrip("/")
+    base = path.rstrip("/")
     tomb = _read_tombstones(spark, base)
     rows = read_artifact(spark, base, "stats").select(
         F.lit(None).cast("bigint").alias("doc_id"), "n_docs",
@@ -388,19 +425,40 @@ def _corrected_index_stats(
         else:
             dead.setdefault(r["doc_id"], r["dl"])
     # guard the degenerate index: every ingested batch held only
-    # empty-text documents, so the stats rows sum to 0 (round-12 ADVICE
-    # fix; pinned in tests/test_indexing.py)
+    # empty-text documents, so the stats rows sum to 0 (pinned in
+    # tests/test_indexing.py)
     if n_docs == 0:
         raise ValueError(
-            f"index at {path_for_errors!r} contains no documents "
+            f"index at {path!r} contains no documents "
             "(all ingested batches were empty or empty-text)")
     n_docs -= len(dead)
     sum_dl -= sum(dead.values())
     if n_docs <= 0:
         raise ValueError(
-            f"index at {path_for_errors!r} has no surviving documents "
+            f"index at {path!r} has no surviving documents "
             "(every indexed document is tombstoned; compact or rebuild)")
-    return n_docs, sum_dl, float(sum_dl) / float(n_docs), tomb, len(dead)
+    return n_docs, sum_dl, float(sum_dl) / float(n_docs), len(dead)
+
+
+def _term_df(postings: DataFrame) -> DataFrame:
+    """(token, _df): each term's document frequency counted over
+    ``postings`` — the df every BM25 score uses."""
+    return postings.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
+
+
+def _bm25_idf(n_docs: int, df_col: Column) -> Column:
+    """Robertson–Sparck Jones idf, ``ln(1 + (n - df + 0.5) / (df + 0.5))``
+    — the one idf expression scoring and term selection (more-like-this,
+    PRF) share."""
+    return F.log(F.lit(1.0) + (F.lit(n_docs) - df_col + 0.5)
+                 / (df_col + 0.5))
+
+
+def _bm25_norm(avgdl: float, k1: float, b: float) -> Column:
+    """BM25's saturating, length-normalized tf over a scored posting's
+    ``tf`` and ``dl`` columns."""
+    return (F.col("tf") * (k1 + 1)
+            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl))))
 
 
 def _scored_bm25_unordered(postings: DataFrame, n_docs: int, avgdl: float,
@@ -412,15 +470,12 @@ def _scored_bm25_unordered(postings: DataFrame, n_docs: int, avgdl: float,
     search_after_persisted) can filter on the score BEFORE any limit.
     Arithmetic identical to the ordered path (same function object)."""
     if dft is None:
-        dft = (postings.groupBy("token")
-               .agg(F.count(F.lit(1)).alias("_df")))
-    idf = F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("_df") + 0.5)
-                / (F.col("_df") + 0.5))
-    norm = (F.col("tf") * (k1 + 1)
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl))))
+        dft = _term_df(postings)
     return (postings.join(F.broadcast(dft), "token")
             .groupBy("doc_id")
-            .agg(F.round(F.sum(idf * norm), 6).alias("bm25")))
+            .agg(F.round(F.sum(_bm25_idf(n_docs, F.col("_df"))
+                               * _bm25_norm(avgdl, k1, b)), 6)
+                 .alias("bm25")))
 
 
 def _score_postings_bm25(postings: DataFrame, n_docs: int, avgdl: float,
@@ -464,13 +519,8 @@ def bm25_search_persisted(spark, path: str, query_terms: list[str],
     build-from-surviving-documents score-exactly, with no rescan.
     Query-term df stays exact for free: it is counted from the
     surviving pruned postings."""
-    base = path.rstrip("/")
-    n_docs, _, avgdl, tomb, _ = _corrected_index_stats(spark, base, path)
-    postings = lookup_terms(read_artifact(spark, base, "postings"),
-                            query_terms, num_buckets)
-    if tomb is not None:
-        postings = postings.join(F.broadcast(tomb.select("doc_id")),
-                                 "doc_id", "left_anti")
+    n_docs, _, avgdl, _ = _corrected_index_stats(spark, path)
+    postings = read_search_postings(spark, path, query_terms, num_buckets)
     return _score_postings_bm25(postings, n_docs, avgdl, k1, b, top_k)
 
 
@@ -483,13 +533,8 @@ def read_search_postings(spark, path: str, terms: list[str],
     :func:`_score_postings_bm25`, or any postings consumer — deletion
     awareness comes for free."""
     base = path.rstrip("/")
-    postings = lookup_terms(read_artifact(spark, base, "postings"),
-                            terms, num_buckets)
-    tomb = _read_tombstones(spark, base)
-    if tomb is not None:
-        postings = postings.join(F.broadcast(tomb.select("doc_id")),
-                                 "doc_id", "left_anti")
-    return postings
+    return _live(spark, base, lookup_terms(
+        read_artifact(spark, base, "postings"), terms, num_buckets))
 
 
 def qlm_search_persisted(spark, path: str, terms: list[str],
@@ -506,8 +551,7 @@ def qlm_search_persisted(spark, path: str, terms: list[str],
     postings; candidate doc lengths ride denormalized on the posting
     row. One bucket-pruned scan plus the qlm_topk aggregation; raises
     like qlm_topk when a term is absent from the (surviving) index."""
-    base = path.rstrip("/")
-    _, sum_dl, _, _, _ = _corrected_index_stats(spark, base, path)
+    _, sum_dl, _, _ = _corrected_index_stats(spark, path)
     postings = read_search_postings(spark, path, terms, num_buckets)
     dictionary = (postings.groupBy("token")
                   .agg(F.sum("tf").cast("bigint").alias("cf")))
@@ -541,8 +585,7 @@ def delete_from_index(spark, path: str,
     The tombstone set is assumed takedown-sized (it broadcasts at query
     time); when deletions grow corpus-scale, run :func:`compact_index`
     — which also resets query cost to the no-tombstone path."""
-    base = path.rstrip("/")
-    postings = read_artifact(spark, base, "postings")
+    postings = read_artifact(spark, path.rstrip("/"), "postings")
     if isinstance(doc_ids, DataFrame):
         matched = postings.join(
             F.broadcast(doc_ids.select("doc_id").distinct()), "doc_id")
@@ -551,9 +594,8 @@ def delete_from_index(spark, path: str,
         if not ids:
             raise ValueError("delete_from_index needs at least one doc_id")
         matched = postings.filter(F.col("doc_id").isin(ids))
-    (matched.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-     .transform(_as_artifact, "deletes")
-     .write.mode("append").parquet(base + "/deletes"))
+    tombstones = matched.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+    _write_parts({"deletes": tombstones}, path, num_buckets, "append")
 
 
 def compact_index(spark, path: str, dest: str,
@@ -572,61 +614,23 @@ def compact_index(spark, path: str, dest: str,
     (callers swap paths after — immutable-segment discipline; an
     in-place rewrite would race concurrent readers). The positional
     postings (``<path>/positions``, if present) compact in the same
-    pass."""
-    base, out = path.rstrip("/"), dest.rstrip("/")
-    tomb = _read_tombstones(spark, base)
-    postings = read_artifact(spark, base, "postings") \
-        .select("token", "doc_id", "tf", "dl")
-    if tomb is not None:
-        ids = F.broadcast(tomb.select("doc_id"))
-        postings = postings.join(ids, "doc_id", "left_anti")
-    # the passes re-READ the source parquet (columnar, cheap) rather
-    # than caching — same measured tradeoff as write_search_index —
-    # and run overlapped from a thread pool (guide §2.6), with
-    # rebalance-sized output files (round-13-opt, guide §6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _postings() -> None:
-        (postings.withColumn("bucket",
-                             token_bucket(F.col("token"), num_buckets))
-         .hint("rebalance", "bucket")
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(out + "/postings"))
-
-    def _stats() -> None:
-        (postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-         .agg(F.count(F.lit(1)).alias("n_docs"),
-              F.sum("dl").alias("sum_dl"))
-         .transform(_as_artifact, "stats")
-         .write.mode("overwrite").parquet(out + "/stats"))
-
-    def _dict() -> None:
-        (postings.groupBy("token")
-         .agg(F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf"),
-              F.min("dl").alias("min_dl"))
-         .transform(_as_artifact, "dict")
-         .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
-         .hint("rebalance", "bucket")
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(out + "/dict"))
-
-    def _positions() -> None:
-        if not _exists(spark, base + "/positions"):
-            return  # no positional segment to compact
-        pos = read_artifact(spark, base, "positions") \
-            .select("token", "doc_id", "positions")
-        if tomb is not None:
-            pos = pos.join(F.broadcast(tomb.select("doc_id")),
-                           "doc_id", "left_anti")
-        (pos.withColumn("bucket", token_bucket(F.col("token"), num_buckets))
-         .hint("rebalance", "bucket")
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(out + "/positions"))
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        jobs = (_postings, _stats, _dict, _positions)
-        for done in [pool.submit(j) for j in jobs]:
-            done.result()  # re-raise the first failure
+    pass. The passes re-READ the source parquet (columnar, cheap)
+    rather than caching."""
+    base = path.rstrip("/")
+    postings = _live(spark, base, read_artifact(spark, base, "postings")
+                     .select("token", "doc_id", "tf", "dl"))
+    parts = {
+        "postings": postings,
+        "stats": (postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+                  .agg(F.count(F.lit(1)).alias("n_docs"),
+                       F.sum("dl").alias("sum_dl"))),
+        "dict": _dictionary(postings),
+    }
+    if _exists(spark, base + "/positions"):
+        parts["positions"] = _live(
+            spark, base, read_artifact(spark, base, "positions")
+            .select("token", "doc_id", "positions"))
+    _write_parts(parts, dest, num_buckets, "overwrite")
 
 
 def bm25_maxscore_search(spark, path: str, query_terms: list[str],
@@ -678,10 +682,9 @@ def bm25_maxscore_search(spark, path: str, query_terms: list[str],
     {essential_terms, n_candidates, pushed, rounds} — the observable
     record that pruning fired (tests assert on it; operators can log
     it)."""
-    base = path.rstrip("/")
-    n_docs, _, avgdl, tomb, n_tomb = _corrected_index_stats(spark, base, path)
+    n_docs, _, avgdl, n_tomb = _corrected_index_stats(spark, path)
     schema = "doc_id bigint, bm25 double"
-    dict_rows = (lookup_terms(read_artifact(spark, base, "dict"),
+    dict_rows = (lookup_terms(read_artifact(spark, path, "dict"),
                               query_terms, num_buckets)
                  .groupBy("token")
                  .agg(F.sum("df").alias("df"),
@@ -701,18 +704,15 @@ def bm25_maxscore_search(spark, path: str, query_terms: list[str],
                       + k1 * (1 - b + b * int(r["min_dl"]) / avgdl)))
         ubs.append((r["token"], idf_ub * norm_ub))
     ubs.sort(key=lambda x: (-x[1], x[0]))
-    postings = lookup_terms(read_artifact(spark, base, "postings"),
-                            query_terms, num_buckets)
-    if tomb is not None:
-        postings = postings.join(F.broadcast(tomb.select("doc_id")),
-                                 "doc_id", "left_anti")
+    postings = read_search_postings(spark, path, query_terms, num_buckets)
+    if n_tomb:
         # deletions invalidate the dict's df (survivors' df is smaller),
         # so exact-idf scoring recounts df over the surviving pruned
         # postings — one extra aggregation; the candidate restriction
         # still prunes the scoring join. Without tombstones, the dict's
         # algebraic df IS the exact df (segments are document-disjoint)
         # and the non-essential buckets are never aggregated at all.
-        dft = postings.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
+        dft = _term_df(postings)
     else:
         dft = spark.createDataFrame(
             [(r["token"], int(r["df"])) for r in dict_rows],
@@ -767,13 +767,10 @@ def write_position_index(df: DataFrame, path: str,
     segment discipline as the tf postings; shares ``<path>/deletes``
     tombstones with the rest of the index.
 
-    Round-13-opt: the (token, doc_id, positions) rows are computed
-    MAP-SIDE — each document sorts its own (token, position) structs
-    and run-length-slices them into per-token position arrays, the
-    same shuffle-removal as :func:`build_scored_postings` (the old
-    posexplode + groupBy + collect_list shuffled one row per token
-    OCCURRENCE); the only exchange left is the rebalance that sizes
-    the output files."""
+    The (token, doc_id, positions) rows are computed MAP-SIDE — each
+    document sorts its own (token, position) structs and
+    run-length-slices them into per-token position arrays; the only
+    exchange is the rebalance that sizes the output files."""
     from etl_mark1_spark.functions.text import normalized_text
 
     tp = F.filter(
@@ -806,11 +803,7 @@ def write_position_index(df: DataFrame, path: str,
               .select("doc_id", F.explode(entries).alias("_e"))
               .select(F.col("_e.token").alias("token"), "doc_id",
                       F.col("_e.positions").alias("positions")))
-    (_as_artifact(rolled, "positions")
-     .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
-     .hint("rebalance", "bucket")
-     .write.mode("append").partitionBy("bucket")
-     .parquet(path.rstrip("/") + "/positions"))
+    _write_parts({"positions": rolled}, path, num_buckets, "append")
 
 
 def read_position_postings(spark, path: str, terms: list[str],
@@ -823,12 +816,8 @@ def read_position_postings(spark, path: str, terms: list[str],
     :func:`best_window` run UNCHANGED against the persisted form
     (parity pinned in tests/test_indexing.py)."""
     base = path.rstrip("/")
-    rolled = lookup_terms(read_artifact(spark, base, "positions"),
-                          terms, num_buckets)
-    tomb = _read_tombstones(spark, base)
-    if tomb is not None:
-        rolled = rolled.join(F.broadcast(tomb.select("doc_id")),
-                             "doc_id", "left_anti")
+    rolled = _live(spark, base, lookup_terms(
+        read_artifact(spark, base, "positions"), terms, num_buckets))
     return rolled.select("token", "doc_id",
                          F.explode("positions").alias("pos"))
 
@@ -872,53 +861,9 @@ def write_search_index_segment(df: DataFrame, path: str, seg: str,
     The ``seg`` partition column rides along harmlessly at query time
     (readers filter on bucket/token and aggregate over rows). Do not
     mix this layout with :func:`write_search_index` appends under one
-    path — partition discovery needs consistent partition columns.
-    Artifacts recompute rather than cache and share the round-13-opt
-    ingest shape of :func:`write_search_index` (map-side scored
-    postings, stats straight off the document frame, rebalance-sized
-    files, overlapped artifact jobs)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    base = path.rstrip("/")
-
-    def _postings() -> None:
-        (_as_artifact(build_scored_postings(df, text_col=text_col,
-                                            id_col=id_col), "postings")
-         .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
-         .withColumn("seg", F.lit(seg))
-         .hint("rebalance", "bucket")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket", "seg").parquet(base + "/postings"))
-
-    def _stats() -> None:
-        (df.select(F.size(_doc_tokens(text_col)).cast("bigint")
-                   .alias("_dl"))
-         .filter(F.col("_dl") > 0)
-         .agg(F.count(F.lit(1)).alias("n_docs"),
-              F.sum("_dl").alias("sum_dl"))
-         .transform(_as_artifact, "stats")
-         .withColumn("seg", F.lit(seg))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("seg").parquet(base + "/stats"))
-
-    def _dict() -> None:
-        (build_scored_postings(df, text_col=text_col, id_col=id_col)
-         .groupBy("token")
-         .agg(F.count(F.lit(1)).alias("df"), F.max("tf").alias("max_tf"),
-              F.min("dl").alias("min_dl"))
-         .transform(_as_artifact, "dict")
-         .withColumn("bucket", token_bucket(F.col("token"), num_buckets))
-         .withColumn("seg", F.lit(seg))
-         .hint("rebalance", "bucket")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket", "seg").parquet(base + "/dict"))
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for done in [pool.submit(j) for j in (_postings, _stats, _dict)]:
-            done.result()  # re-raise the first failure
+    path — partition discovery needs consistent partition columns."""
+    _write_parts(_ingest_parts(df, text_col, id_col), path, num_buckets,
+                 "overwrite", seg=seg)
 
 
 def conjunctive_search(postings: DataFrame, terms: list[str],

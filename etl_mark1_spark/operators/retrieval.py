@@ -52,27 +52,17 @@ from pyspark.sql import functions as F
 
 from etl_mark1_spark.operators.indexing import (
     DEFAULT_BUCKETS,
+    _bm25_idf,
+    _bm25_norm,
     _corrected_index_stats,
+    _fold_terms,
     _score_postings_bm25,
     _scored_bm25_unordered,
+    _term_df,
+    bm25_search_persisted,
     read_artifact,
     read_search_postings,
 )
-
-
-def _folded(spark, terms: Sequence[str]) -> list[str]:
-    """Query terms case-folded the way the index tokenizer folded the
-    corpus (functions/text.py:normalized_text) — driver-side for ASCII,
-    through the engine's lower() otherwise (Python and the JVM disagree
-    on Unicode edge cases; same rule as indexing.py:lookup_terms)."""
-    terms = list(terms)
-    if not terms:
-        return []
-    if all(t.isascii() for t in terms):
-        return sorted({t.lower() for t in terms})
-    rows = (spark.createDataFrame([(x,) for x in terms], "term string")
-            .select(F.lower(F.col("term")).alias("tok")).collect())
-    return sorted({r["tok"] for r in rows})
 
 
 def _read_dict(spark, path: str) -> DataFrame:
@@ -86,15 +76,6 @@ def _read_dict(spark, path: str) -> DataFrame:
     return (read_artifact(spark, path, "dict")
             .groupBy("token")
             .agg(F.sum("df").cast("bigint").alias("df")))
-
-
-def _bm25_idf(n_docs: int, df_col) -> F.Column:
-    """Robertson–Sparck Jones idf — the exact expression
-    _score_postings_bm25 uses, shared so term-selection weights
-    (more-like-this, PRF) rank with the same idf the final scoring
-    applies."""
-    return F.log(F.lit(1.0) + (F.lit(n_docs) - df_col + 0.5)
-                 / (df_col + 0.5))
 
 
 def boolean_search_persisted(spark, path: str,
@@ -119,15 +100,15 @@ def boolean_search_persisted(spark, path: str,
     first would inflate idf; same discipline as
     bm25_maxscore_search's dft parameter). Tombstones are anti-joined
     by the shared reader, so every count is over surviving documents."""
-    must_f = _folded(spark, must)
-    should_f = [t for t in _folded(spark, should) if t not in set(must_f)]
+    must_f = _fold_terms(spark, must)
+    should_f = [t for t in _fold_terms(spark, should) if t not in set(must_f)]
     if not must_f and not should_f:
         raise ValueError("boolean_search_persisted needs at least one "
                          "must or should term")
-    n_docs, _, avgdl, _, _ = _corrected_index_stats(spark, path, path)
+    n_docs, _, avgdl, _ = _corrected_index_stats(spark, path)
     post = read_search_postings(spark, path, must_f + should_f,
                                 num_buckets=num_buckets)
-    dft = post.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
+    dft = _term_df(post)
     if must_f:
         cand = (post.filter(F.col("token").isin(must_f))
                 .groupBy("doc_id")
@@ -136,7 +117,7 @@ def boolean_search_persisted(spark, path: str,
                 .select("doc_id"))
     else:
         cand = post.select("doc_id").distinct()
-    must_not_f = _folded(spark, must_not)
+    must_not_f = _fold_terms(spark, must_not)
     if must_not_f:
         excl = (read_search_postings(spark, path, must_not_f,
                                      num_buckets=num_buckets)
@@ -162,7 +143,7 @@ def expand_terms_fuzzy(spark, path: str, terms: Sequence[str],
     follow-up scoring scan) and is refused LOUDLY above
     ``max_expansion`` — a too-fuzzy query against a huge vocabulary
     must not silently turn into an all-bucket scan."""
-    folded = _folded(spark, terms)
+    folded = _fold_terms(spark, terms)
     if not folded:
         raise ValueError("expand_terms_fuzzy needs at least one term")
     vocab = _read_dict(spark, path).select("token")
@@ -193,17 +174,15 @@ def fuzzy_search_persisted(spark, path: str, terms: Sequence[str],
     neighborhood is empty returns an empty (doc_id, bm25) frame rather
     than raising: zero hits is a search RESULT.
 
-    After expansion the plan is exactly bm25_search_persisted's:
-    pruned-bucket postings read, tombstone anti-join, one aggregation,
-    ordered limit."""
+    After expansion it is :func:`bm25_search_persisted` over the
+    expanded terms: pruned-bucket postings read, tombstone anti-join,
+    one aggregation, ordered limit."""
     expanded = expand_terms_fuzzy(spark, path, terms, max_dist=max_dist,
                                   max_expansion=max_expansion)
     if not expanded:
         return spark.createDataFrame([], "doc_id bigint, bm25 double")
-    n_docs, _, avgdl, _, _ = _corrected_index_stats(spark, path, path)
-    post = read_search_postings(spark, path, expanded,
-                                num_buckets=num_buckets)
-    return _score_postings_bm25(post, n_docs, avgdl, k1, b, top_k)
+    return bm25_search_persisted(spark, path, expanded, top_k=top_k, k1=k1,
+                                 b=b, num_buckets=num_buckets)
 
 
 def more_like_this_persisted(spark, path: str, doc_id: int,
@@ -229,7 +208,7 @@ def more_like_this_persisted(spark, path: str, doc_id: int,
     idf identical to what any other query would see. Pass a dict as
     ``diagnostics`` to receive the selected seed terms (same
     convention as bm25_maxscore_search)."""
-    n_docs, _, avgdl, _, _ = _corrected_index_stats(spark, path, path)
+    n_docs, _, avgdl, _ = _corrected_index_stats(spark, path)
     seed = (read_artifact(spark, path, "postings")
             .filter(F.col("doc_id") == int(doc_id))
             .select("token", "tf"))
@@ -247,7 +226,7 @@ def more_like_this_persisted(spark, path: str, doc_id: int,
         return spark.createDataFrame([], "doc_id bigint, bm25 double")
     post = read_search_postings(spark, path, terms,
                                 num_buckets=num_buckets)
-    dft = post.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
+    dft = _term_df(post)
     return _score_postings_bm25(
         post.filter(F.col("doc_id") != int(doc_id)),
         n_docs, avgdl, k1, b, top_k, dft=dft)
@@ -276,10 +255,10 @@ def prf_search_persisted(spark, path: str, terms: Sequence[str],
     Feedback documents are by construction live (they scored through
     the tombstone-aware first pass). Pass a dict as ``diagnostics`` to
     receive the feedback ids and expansion terms."""
-    folded = _folded(spark, terms)
+    folded = _fold_terms(spark, terms)
     if not folded:
         raise ValueError("prf_search_persisted needs at least one term")
-    n_docs, _, avgdl, _, _ = _corrected_index_stats(spark, path, path)
+    n_docs, _, avgdl, _ = _corrected_index_stats(spark, path)
     post1 = read_search_postings(spark, path, folded,
                                  num_buckets=num_buckets)
     first = _score_postings_bm25(post1, n_docs, avgdl, k1, b, fb_docs)
@@ -307,15 +286,12 @@ def prf_search_persisted(spark, path: str, terms: Sequence[str],
         "token string, _w double")
     post = read_search_postings(spark, path, folded + exp_terms,
                                 num_buckets=num_buckets)
-    dft = post.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
-    norm = (F.col("tf") * (k1 + 1)
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl")
-                                   / F.lit(avgdl))))
-    return (post.join(F.broadcast(dft), "token")
+    return (post.join(F.broadcast(_term_df(post)), "token")
             .join(F.broadcast(weights), "token")
             .groupBy("doc_id")
             .agg(F.round(F.sum(F.col("_w")
-                               * _bm25_idf(n_docs, F.col("_df")) * norm),
+                               * _bm25_idf(n_docs, F.col("_df"))
+                               * _bm25_norm(avgdl, k1, b)),
                          6).alias("bm25"))
             .orderBy(F.col("bm25").desc(), F.col("doc_id"))
             .limit(top_k))
@@ -335,7 +311,7 @@ def complete_prefix(spark, path: str, prefix: str,
     partition range — noted extension, not needed at metadata scale.
     Under tombstones df is the ingest-time count (an upper bound);
     compaction (operators/indexing.py:compact_index) resets it exactly."""
-    pfx = _folded(spark, [prefix])[0]
+    pfx = _fold_terms(spark, [prefix])[0]
     return (_read_dict(spark, path)
             .filter(F.col("token").startswith(pfx))
             .orderBy(F.col("df").desc(), F.col("token"))
@@ -427,16 +403,16 @@ def search_query_persisted(spark, path: str, qstr: str, top_k: int = 10,
     from etl_mark1_spark.operators.indexing import phrase_search_persisted
 
     q = parse_query(qstr)
-    must = _folded(spark, q["must"])
-    must_not = _folded(spark, q["must_not"])
-    phrases = [_folded_phrase(spark, p) for p in q["phrases"]]
+    must = _fold_terms(spark, q["must"])
+    must_not = _fold_terms(spark, q["must_not"])
+    phrases = [_fold_terms(spark, p, ordered=True) for p in q["phrases"]]
     expansions: list[str] = []
     for term, dist in q["fuzzy"]:
         expansions.extend(expand_terms_fuzzy(
             spark, path, [term], max_dist=dist,
             max_expansion=max_expansion))
-    should = _folded(spark, q["should"] + expansions
-                     + [w for p in phrases for w in p])
+    should = _fold_terms(spark, q["should"] + expansions
+                         + [w for p in phrases for w in p])
     should = [t for t in should if t not in set(must)]
     if diagnostics is not None:
         diagnostics["parsed"] = q
@@ -444,10 +420,10 @@ def search_query_persisted(spark, path: str, qstr: str, top_k: int = 10,
     positive = must + should
     if not positive:
         return spark.createDataFrame([], "doc_id bigint, bm25 double")
-    n_docs, _, avgdl, _, _ = _corrected_index_stats(spark, path, path)
+    n_docs, _, avgdl, _ = _corrected_index_stats(spark, path)
     post = read_search_postings(spark, path, positive,
                                 num_buckets=num_buckets)
-    dft = post.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
+    dft = _term_df(post)
     cand = None
     if must:
         cand = (post.filter(F.col("token").isin(must))
@@ -472,18 +448,6 @@ def search_query_persisted(spark, path: str, qstr: str, top_k: int = 10,
                                 n_docs, avgdl, k1, b, top_k, dft=dft)
 
 
-def _folded_phrase(spark, words: Sequence[str]) -> list[str]:
-    """Phrase words case-folded IN ORDER (``_folded`` sorts and dedups —
-    wrong for a phrase, where order and repeats are the semantics)."""
-    if all(w.isascii() for w in words):
-        return [w.lower() for w in words]
-    rows = (spark.createDataFrame([(i, w) for i, w in enumerate(words)],
-                                  "i int, w string")
-            .select("i", F.lower(F.col("w")).alias("w"))
-            .orderBy("i").collect())
-    return [r["w"] for r in rows]
-
-
 def facet_counts(spark, path: str, terms: Sequence[str],
                  metadata: DataFrame, facet_col: str,
                  top_k: int | None = None,
@@ -498,7 +462,7 @@ def facet_counts(spark, path: str, terms: Sequence[str],
     metadata frame on doc_id — a shuffle keyed by ids the pruned scan
     already bounded, never a corpus re-scan; the aggregation output is
     facet-cardinality-sized. Tombstoned docs never reach the join."""
-    folded = _folded(spark, terms)
+    folded = _fold_terms(spark, terms)
     if not folded:
         raise ValueError("facet_counts needs at least one term")
     cand = (read_search_postings(spark, path, folded,
@@ -530,10 +494,10 @@ def search_after_persisted(spark, path: str, terms: Sequence[str],
     filter runs BEFORE the ordered limit
     (indexing.py:_scored_bm25_unordered), so page N costs the same
     one pruned scan + aggregation as page 1."""
-    folded = _folded(spark, terms)
+    folded = _fold_terms(spark, terms)
     if not folded:
         raise ValueError("search_after_persisted needs at least one term")
-    n_docs, _, avgdl, _, _ = _corrected_index_stats(spark, path, path)
+    n_docs, _, avgdl, _ = _corrected_index_stats(spark, path)
     post = read_search_postings(spark, path, folded,
                                 num_buckets=num_buckets)
     scored = _scored_bm25_unordered(post, n_docs, avgdl, k1, b)
@@ -556,7 +520,7 @@ def index_stats(spark, path: str) -> DataFrame:
     vocab_size/n_postings are the ingest-time counts (upper bounds —
     per-token correction would need a postings scan); compaction
     resets them exactly."""
-    n_docs, sum_dl, _, _, _ = _corrected_index_stats(spark, path, path)
+    n_docs, sum_dl, _, _ = _corrected_index_stats(spark, path)
     return (_read_dict(spark, path)
             .agg(F.count(F.lit(1)).cast("bigint").alias("vocab_size"),
                  F.sum("df").cast("bigint").alias("n_postings"))
@@ -590,24 +554,21 @@ def bm25_search_many(spark, path: str, queries: dict[str, Sequence[str]],
 
     if not queries:
         raise ValueError("bm25_search_many needs at least one query")
-    folded = {qid: _folded(spark, terms) for qid, terms in queries.items()}
+    folded = {qid: _fold_terms(spark, terms) for qid, terms in queries.items()}
     if any(not terms for terms in folded.values()):
         raise ValueError("every query needs at least one term")
     all_terms = sorted({t for terms in folded.values() for t in terms})
-    n_docs, _, avgdl, _, _ = _corrected_index_stats(spark, path, path)
+    n_docs, _, avgdl, _ = _corrected_index_stats(spark, path)
     post = read_search_postings(spark, path, all_terms,
                                 num_buckets=num_buckets)
-    dft = post.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
     qmap = spark.createDataFrame(
         [(qid, t) for qid, terms in sorted(folded.items()) for t in terms],
         "qid string, token string")
-    norm = (F.col("tf") * (k1 + 1)
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl")
-                                   / F.lit(avgdl))))
-    scored = (post.join(F.broadcast(dft), "token")
+    scored = (post.join(F.broadcast(_term_df(post)), "token")
               .join(F.broadcast(qmap), "token")
               .groupBy("qid", "doc_id")
-              .agg(F.round(F.sum(_bm25_idf(n_docs, F.col("_df")) * norm),
+              .agg(F.round(F.sum(_bm25_idf(n_docs, F.col("_df"))
+                                 * _bm25_norm(avgdl, k1, b)),
                            6).alias("bm25")))
     w = Window.partitionBy("qid").orderBy(F.col("bm25").desc(),
                                           F.col("doc_id"))
@@ -628,10 +589,9 @@ def serp_page(spark, path: str, terms: Sequence[str], top_k: int = 5,
     top-k ids, so the page costs one term-bucket scan per artifact —
     the composition is exactly what a search frontend renders, pinned
     here so the two operators stay joinable."""
-    from etl_mark1_spark.operators.indexing import (best_window_persisted,
-                                                    bm25_search_persisted)
+    from etl_mark1_spark.operators.indexing import best_window_persisted
 
-    folded = _folded(spark, terms)
+    folded = _fold_terms(spark, terms)
     ranked = bm25_search_persisted(spark, path, folded, top_k=top_k,
                                    k1=k1, b=b, num_buckets=num_buckets)
     snips = best_window_persisted(spark, path, list(folded), width=width,

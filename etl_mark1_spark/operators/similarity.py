@@ -885,14 +885,15 @@ def ivfpq_refine(shortlist: DataFrame, vectors: DataFrame,
 
 def _ivf_tombstones(spark, path: str):
     """The index's deduplicated tombstone ids from ``<path>/deletes``,
-    or None when no delete was ever issued."""
-    from pyspark.errors import AnalysisException
+    or None when no delete was ever issued. Probed with one Hadoop
+    ``exists`` and read with the declared ``vec_id bigint`` schema, so
+    opening the tombstones launches no schema-inference job."""
+    from etl_mark1_spark.operators.indexing import _exists
 
-    try:
-        raw = spark.read.parquet(path.rstrip("/") + "/deletes")
-    except AnalysisException:
+    deletes = path.rstrip("/") + "/deletes"
+    if not _exists(spark, deletes):
         return None
-    return raw.select("vec_id").distinct()
+    return spark.read.schema("vec_id bigint").parquet(deletes).distinct()
 
 
 def ivf_delete(spark, path: str, vec_ids) -> None:
@@ -907,7 +908,7 @@ def ivf_delete(spark, path: str, vec_ids) -> None:
     :func:`ivf_compact`. ``vec_ids`` is a DataFrame with a ``vec_id``
     column or a list of ids."""
     if isinstance(vec_ids, DataFrame):
-        rows = vec_ids.select("vec_id").distinct()
+        rows = vec_ids.select(F.col("vec_id").cast("bigint")).distinct()
     else:
         ids = sorted({int(i) for i in vec_ids})
         if not ids:

@@ -64,22 +64,20 @@ class RunReport:
 class PipelineExecutor:
     """Walks the node DAG passing DataFrames along edges.
 
-    ``count_rows=True`` forces an action per node for observability (like the
-    reference's per-node row logs, engine.py:104-108). Prefer
-    ``observe_rows=True``: the same per-node row counts piggy-back on the
-    sink actions the pipeline runs anyway (``Observation`` accumulators in
-    the existing plans), so the lineage stays lazy end-to-end and the
-    cluster runs one job, not one per node.
+    ``observe_rows=True`` logs per-node row counts (like the reference's
+    per-node row logs, engine.py:104-108) without an action of its own:
+    the counts piggy-back on the sink actions the pipeline runs anyway
+    (``Observation`` accumulators in the existing plans), so the lineage
+    stays lazy end-to-end and the cluster runs one job, not one per node.
     """
 
     def __init__(self, spark: SparkSession, max_retries: int = 3,
-                 retry_delay: float = 2.0, count_rows: bool = False,
-                 observe_rows: bool = False, parallel_branches: bool = False,
+                 retry_delay: float = 2.0, observe_rows: bool = False,
+                 parallel_branches: bool = False,
                  max_parallel_nodes: int = 8):
         self.spark = spark
         self._max_retries = max_retries
         self._retry_delay = retry_delay
-        self._count_rows = count_rows
         self._observe_rows = observe_rows
         self._parallel_branches = parallel_branches
         self._max_parallel_nodes = max_parallel_nodes
@@ -154,9 +152,7 @@ class PipelineExecutor:
             return False
         log.duration_s = time.monotonic() - started
         out = self._node_outputs.get(node_id)
-        if self._count_rows and isinstance(out, DataFrame):
-            log.rows = out.count()
-        elif self._observe_rows and isinstance(out, DataFrame):
+        if self._observe_rows and isinstance(out, DataFrame):
             from pyspark.sql import Observation
 
             obs = Observation(f"rows_{node_id}")
@@ -205,8 +201,8 @@ class PipelineExecutor:
 
         ``observe_rows`` attaches an ``Observation`` (an
         ``AggregatingAccumulator`` riding the node's existing plan) instead
-        of ``count_rows``'s per-node ``count()`` action — at 100 TB an
-        extra full pass per node is the difference between one job and N.
+        of a per-node ``count()`` action — at 100 TB an extra full pass
+        per node is the difference between one job and N.
         Metrics exist only for nodes some sink action actually executed;
         nodes on never-actioned branches keep ``rows=None`` (the probe
         raises / returns empty pre-action, which is the signal itself)."""

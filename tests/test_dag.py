@@ -23,7 +23,7 @@ def test_end_to_end_pipeline(spark, sf_dir, tmp_path):
                   {"source": "tf", "target": "val"},
                   {"source": "val", "target": "out"}],
     }
-    report = PipelineExecutor(spark, count_rows=True).execute(definition)
+    report = PipelineExecutor(spark, observe_rows=True).execute(definition)
     assert report.status == "succeeded"
     assert [log.status for log in report.node_logs] == ["succeeded"] * 4
     assert spark.read.parquet(out_path).count() == report.node_logs[1].rows

@@ -986,6 +986,111 @@ def test_index_artifacts_use_declared_schemas(spark, tmp_path):
     assert got == want
 
 
+def test_index_writes_keep_the_callers_job_group(spark, tmp_path):
+    """The concurrent artifact writes run in the caller's job group:
+    the group holds the jobs of all three artifact writes, and none of
+    them runs without a group."""
+    from etl_mark1_spark.operators.indexing import write_search_index
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("index-write", "write_search_index")
+    try:
+        write_search_index(_docs(spark), str(tmp_path / "grouped"),
+                           num_buckets=8)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(tracker.getJobIdsForGroup("index-write")) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def _artifact_rows(spark, path, part):
+    """Sorted rows of one artifact, layout columns but ``seg`` kept."""
+    from etl_mark1_spark.operators.indexing import read_artifact
+
+    df = read_artifact(spark, path, part)
+    return sorted(tuple(r) for r in df.drop("seg").collect())
+
+
+def test_index_writers_persist_identical_artifacts(spark, tmp_path):
+    """For the same surviving documents, write_search_index, the
+    streaming segment writer (segments merged) and compact_index of a
+    two-segment index with one delete persist the same postings, stats
+    sums, dict and positions."""
+    from etl_mark1_spark.operators.indexing import (
+        compact_index, delete_from_index, read_artifact, write_position_index,
+        write_search_index, write_search_index_segment)
+
+    docs = _docs(spark, DOCS + [(6, "the dog and the fox"), (7, "")])
+    live = docs.filter(F.col("doc_id") != 1)
+    flat, segs, src, packed = (str(tmp_path / d) for d in
+                               ("flat", "segs", "src", "packed"))
+    write_search_index(live, flat, num_buckets=8)
+    write_position_index(live, flat, num_buckets=8)
+    for i, part in enumerate((live.filter(F.col("doc_id") <= 4),
+                              live.filter(F.col("doc_id") > 4))):
+        write_search_index_segment(part, segs, seg=f"s{i}", num_buckets=8)
+    for part in (docs.filter(F.col("doc_id") % 2 == 0),
+                 docs.filter(F.col("doc_id") % 2 == 1)):
+        write_search_index(part, src, num_buckets=8)
+        write_position_index(part, src, num_buckets=8)
+    delete_from_index(spark, src, [1], num_buckets=8)
+    compact_index(spark, src, packed, num_buckets=8)
+
+    def stats(path):
+        return tuple(read_artifact(spark, path, "stats")
+                     .agg(F.sum("n_docs"), F.sum("sum_dl")).first())
+
+    def merged_dict(path):
+        return sorted(tuple(r) for r in read_artifact(spark, path, "dict")
+                      .groupBy("token", "bucket")
+                      .agg(F.sum("df").alias("df"),
+                           F.max("max_tf").alias("max_tf"),
+                           F.min("min_dl").alias("min_dl"))
+                      .select("token", "df", "max_tf", "min_dl", "bucket")
+                      .collect())
+
+    want = {p: _artifact_rows(spark, flat, p)
+            for p in ("postings", "dict", "positions")}
+    assert want["postings"] and want["positions"]
+    assert stats(flat) == stats(segs) == stats(packed) == (5, 24)
+    assert _artifact_rows(spark, segs, "postings") == want["postings"]
+    assert merged_dict(segs) == want["dict"]
+    for part, rows in want.items():
+        assert _artifact_rows(spark, packed, part) == rows, part
+
+
+def test_ivf_tombstone_read_launches_no_schema_inference_job(spark,
+                                                             tmp_path):
+    """The IVF tombstones open with a declared schema: reading them
+    launches no job, and a probe after ivf_delete launches no more
+    ``parquet at`` jobs than the probe before it (the vector and
+    centroid reads)."""
+    from etl_mark1_spark.operators.similarity import (_ivf_tombstones,
+                                                      ivf_build, ivf_delete,
+                                                      ivf_index_write,
+                                                      ivf_topk_persisted)
+
+    vecs = spark.createDataFrame(_vec_rows(random.Random(5), 30),
+                                 "vec_id int, embedding array<double>")
+    path = str(tmp_path / "ivf_tomb")
+    assigned, cents = ivf_build(vecs, num_centroids=3, seed=1)
+    ivf_index_write(assigned, cents, path)
+
+    def schema_jobs():
+        stages = _job_stages(spark, lambda: ivf_topk_persisted(
+            spark, path, [0.1] * 8, k=5).collect())
+        return [s for s in stages if s.startswith("parquet at")]
+
+    before = schema_jobs()
+    ivf_delete(spark, path, vecs.filter(F.col("vec_id") < 3))
+    assert _job_stages(spark, lambda: _ivf_tombstones(spark, path)) == []
+    assert schema_jobs() == before
+    assert spark.read.parquet(path + "/deletes").schema.simpleString() \
+        == "struct<vec_id:bigint>"
+
+
 def test_segment_report_hand_counted(spark):
     import hashlib
 
