@@ -364,8 +364,8 @@ def streaming_index_ingest_docs(spark: SparkSession,
 """)
 def ann_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tombstone deletion for the persisted VECTOR index
-    (operators/similarity.py:ivf_delete — the vector twin of
-    delete_from_index): the embeddings are clustered and written
+    (operators/similarity.py:ivf_delete, on the segment layout shared
+    with the text index): the embeddings are clustered and written
     partitioned by centroid, every vec_id % 7 == 0 vector is deleted
     (takedowns carry embeddings too), and the probe anti-joins the
     broadcast tombstone set. Probing ALL centroids makes the result the
@@ -403,9 +403,7 @@ def ann_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 """)
 def streaming_ivf_ingest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest into the persisted VECTOR index
-    (streaming/events.py:ivf_ingest_sink — the embedding twin of the
-    round's text-index streaming sink, completing
-    crawl-to-searchable-corpus for BOTH retrieval modalities): centroids
+    (streaming/events.py:ivf_ingest_sink): centroids
     are seeded once (operators/similarity.py:ivf_init — the
     bootstrap-then-stream shape), the embedding stream drains through
     foreachBatch with map-side assignment against those fixed centroids,

@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_mark1_spark.functions.grams import word_ngram_rows
+from etl_mark1_spark.operators.segments import (_exists, _live,
+                                                _read_tombstones, _write_parts)
 
 #: partition count for persisted indexes — a term lookup reads exactly one
 #: of these buckets. 64 keeps sf-scale fixture writes small; production
@@ -59,24 +61,16 @@ ARTIFACT_COLUMNS = {
 }
 
 
-def _as_artifact(df: DataFrame, part: str) -> DataFrame:
-    """``df``'s columns of artifact ``part``, cast to their declared
-    types — what every artifact writer persists."""
-    return df.select(*[F.col(c).cast(t) for c, t in ARTIFACT_COLUMNS[part]])
-
-
 def read_artifact(spark, path: str, part: str) -> DataFrame:
     """Artifact ``part`` of the search index at ``path``, read with its
     declared schema. A missing artifact still raises
     ``AnalysisException``."""
-    ddl = ", ".join(f"{c} {t}" for c, t in ARTIFACT_COLUMNS[part])
-    return spark.read.schema(ddl).parquet(f"{path.rstrip('/')}/{part}")
+    return spark.read.schema(_ddl(part)).parquet(f"{path.rstrip('/')}/{part}")
 
 
-def _exists(spark, path: str) -> bool:
-    """Whether ``path`` exists, by one Hadoop ``FileSystem`` call."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+def _ddl(part: str) -> str:
+    """The declared schema of artifact ``part`` as a DDL string."""
+    return ", ".join(f"{c} {t}" for c, t in ARTIFACT_COLUMNS[part])
 
 
 def token_bucket(col: Column, num_buckets: int = DEFAULT_BUCKETS) -> Column:
@@ -298,50 +292,21 @@ def _dictionary(postings: DataFrame) -> DataFrame:
                  F.min("dl").alias("min_dl")))
 
 
-def _write_parts(parts: dict[str, DataFrame], base: str, num_buckets: int,
-                 mode: str, seg: str | None = None) -> None:
-    """Persist each artifact of ``parts`` under ``<base>/<part>``, cast
-    to its declared columns — the one writer of the search index's
-    on-disk layout.
-
-    * An artifact with a token column gets the md5 ``bucket`` partition
-      column and rebalances on it before the write (AQE sizes the
-      output files: a handful at fixture scale, split-sized at
-      production, never tasks x buckets).
-    * ``seg`` adds a ``seg`` partition column written with DYNAMIC
-      partition overwrite, so re-running the same (batch, seg)
-      replaces exactly its own partitions.
-    * The artifact writes are independent jobs and run from one thread
-      pool, so each job's straggler tail back-fills with the next
-      job's tasks. Every job inherits the caller's job group and
-      description."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    def job(part: str, df: DataFrame):
-        def run() -> None:
-            out, keys = _as_artifact(df, part), []
-            if "token" in dict(ARTIFACT_COLUMNS[part]):
-                out = out.withColumn("bucket",
-                                     token_bucket(F.col("token"), num_buckets))
-                keys.append("bucket")
-            if seg is not None:
-                out = out.withColumn("seg", F.lit(seg))
-                keys.append("seg")
-            if "bucket" in keys:
-                out = out.hint("rebalance", "bucket")
-            writer = out.write.mode(mode)
-            if seg is not None:
-                writer = writer.option("partitionOverwriteMode", "dynamic")
-            if keys:
-                writer = writer.partitionBy(*keys)
-            writer.parquet(f"{base.rstrip('/')}/{part}")
-        return inheritable_thread_target(df.sparkSession)(run)
-
-    with ThreadPoolExecutor(max_workers=len(parts)) as pool:
-        for done in [pool.submit(job(p, df)) for p, df in parts.items()]:
-            done.result()  # re-raise the first failure
+def _write_artifacts(parts: dict[str, DataFrame], base: str, mode: str,
+                     num_buckets: int = DEFAULT_BUCKETS,
+                     seg: str | None = None) -> None:
+    """Persist each artifact of ``parts`` through the shared segment
+    writer (operators/segments.py), cast to its declared columns. An
+    artifact with a token column gets the md5 ``bucket`` layout
+    column, which the writer partitions and rebalances on."""
+    laid = {}
+    for part, df in parts.items():
+        out = df.select(*[F.col(c).cast(t) for c, t in ARTIFACT_COLUMNS[part]])
+        if "token" in out.columns:
+            out = out.withColumn("bucket",
+                                 token_bucket(F.col("token"), num_buckets))
+        laid[part] = out
+    _write_parts(laid, base, mode, key="bucket", seg=seg)
 
 
 def write_search_index(df: DataFrame, path: str,
@@ -368,31 +333,8 @@ def write_search_index(df: DataFrame, path: str,
     text scan. Batches must be document-disjoint, like any segment
     write; re-ingest belongs to a compaction pass
     (:func:`compact_index`)."""
-    _write_parts(_ingest_parts(df, text_col, id_col), path, num_buckets,
-                 "append")
-
-
-def _read_tombstones(spark, base: str) -> DataFrame | None:
-    """The index's raw tombstone rows (doc_id, dl) from
-    ``<base>/deletes``, or None when no delete was ever issued (the
-    deletes path does not exist). A double delete leaves a duplicate
-    id: the left anti-join of :func:`_live` gives the same result with
-    it, and :func:`_corrected_index_stats` deduplicates on the
-    driver."""
-    if not _exists(spark, base + "/deletes"):
-        return None
-    return read_artifact(spark, base, "deletes")
-
-
-def _live(spark, base: str, frame: DataFrame) -> DataFrame:
-    """``frame`` without the documents tombstoned in the index at
-    ``base`` — the one tombstone anti-join. The tombstone set is
-    takedown-sized and broadcasts."""
-    tomb = _read_tombstones(spark, base)
-    if tomb is None:
-        return frame
-    return frame.join(F.broadcast(tomb.select("doc_id")), "doc_id",
-                      "left_anti")
+    _write_artifacts(_ingest_parts(df, text_col, id_col), path, "append",
+                     num_buckets)
 
 
 def _corrected_index_stats(spark, path: str
@@ -408,7 +350,7 @@ def _corrected_index_stats(spark, path: str
     the driver. Both are bounded: by the segment count, and by the
     tombstone set every query already broadcasts."""
     base = path.rstrip("/")
-    tomb = _read_tombstones(spark, base)
+    tomb = _read_tombstones(spark, base, _ddl("deletes"))
     rows = read_artifact(spark, base, "stats").select(
         F.lit(None).cast("bigint").alias("doc_id"), "n_docs",
         F.col("sum_dl").alias("dl"))
@@ -534,7 +476,7 @@ def read_search_postings(spark, path: str, terms: list[str],
     awareness comes for free."""
     base = path.rstrip("/")
     return _live(spark, base, lookup_terms(
-        read_artifact(spark, base, "postings"), terms, num_buckets))
+        read_artifact(spark, base, "postings"), terms, num_buckets), "doc_id")
 
 
 def qlm_search_persisted(spark, path: str, terms: list[str],
@@ -562,8 +504,7 @@ def qlm_search_persisted(spark, path: str, terms: list[str],
 
 
 def delete_from_index(spark, path: str,
-                      doc_ids: DataFrame | list[int],
-                      num_buckets: int = DEFAULT_BUCKETS) -> None:
+                      doc_ids: DataFrame | list[int]) -> None:
     """Tombstone deletion for the persisted index lifecycle — takedowns
     and decontamination hits must come OUT of an already-built index
     without a rebuild. Appends (doc_id, dl) rows under
@@ -595,7 +536,7 @@ def delete_from_index(spark, path: str,
             raise ValueError("delete_from_index needs at least one doc_id")
         matched = postings.filter(F.col("doc_id").isin(ids))
     tombstones = matched.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-    _write_parts({"deletes": tombstones}, path, num_buckets, "append")
+    _write_artifacts({"deletes": tombstones}, path, "append")
 
 
 def compact_index(spark, path: str, dest: str,
@@ -618,7 +559,7 @@ def compact_index(spark, path: str, dest: str,
     rather than caching."""
     base = path.rstrip("/")
     postings = _live(spark, base, read_artifact(spark, base, "postings")
-                     .select("token", "doc_id", "tf", "dl"))
+                     .select("token", "doc_id", "tf", "dl"), "doc_id")
     parts = {
         "postings": postings,
         "stats": (postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
@@ -629,8 +570,8 @@ def compact_index(spark, path: str, dest: str,
     if _exists(spark, base + "/positions"):
         parts["positions"] = _live(
             spark, base, read_artifact(spark, base, "positions")
-            .select("token", "doc_id", "positions"))
-    _write_parts(parts, dest, num_buckets, "overwrite")
+            .select("token", "doc_id", "positions"), "doc_id")
+    _write_artifacts(parts, dest, "overwrite", num_buckets)
 
 
 def bm25_maxscore_search(spark, path: str, query_terms: list[str],
@@ -803,7 +744,7 @@ def write_position_index(df: DataFrame, path: str,
               .select("doc_id", F.explode(entries).alias("_e"))
               .select(F.col("_e.token").alias("token"), "doc_id",
                       F.col("_e.positions").alias("positions")))
-    _write_parts({"positions": rolled}, path, num_buckets, "append")
+    _write_artifacts({"positions": rolled}, path, "append", num_buckets)
 
 
 def read_position_postings(spark, path: str, terms: list[str],
@@ -817,7 +758,8 @@ def read_position_postings(spark, path: str, terms: list[str],
     (parity pinned in tests/test_indexing.py)."""
     base = path.rstrip("/")
     rolled = _live(spark, base, lookup_terms(
-        read_artifact(spark, base, "positions"), terms, num_buckets))
+        read_artifact(spark, base, "positions"), terms, num_buckets),
+        "doc_id")
     return rolled.select("token", "doc_id",
                          F.explode("positions").alias("pos"))
 
@@ -862,8 +804,8 @@ def write_search_index_segment(df: DataFrame, path: str, seg: str,
     (readers filter on bucket/token and aggregate over rows). Do not
     mix this layout with :func:`write_search_index` appends under one
     path — partition discovery needs consistent partition columns."""
-    _write_parts(_ingest_parts(df, text_col, id_col), path, num_buckets,
-                 "overwrite", seg=seg)
+    _write_artifacts(_ingest_parts(df, text_col, id_col), path,
+                     "overwrite", num_buckets, seg=seg)
 
 
 def conjunctive_search(postings: DataFrame, terms: list[str],

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_mark1_spark.operators.segments import _live, _write_parts
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -185,13 +187,21 @@ def ivf_topk(assigned_df: DataFrame, centroids: list[list[float]],
              vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
     """Probe the ``nprobe`` centroids nearest to the query; exact top-k within
     the probed inverted lists."""
+    probe = _nearest_centroids(centroids, query, nprobe)
+    pruned = assigned_df.filter(F.col("_centroid").isin(probe))
+    return cosine_topk(pruned, query, k, vec_col, id_col)
+
+
+def _nearest_centroids(centroids: list[list[float]], query: list[float],
+                       nprobe: int) -> list[int]:
+    """The ids of the ``nprobe`` centroids nearest (L2) to ``query``,
+    ascending — the probe list of every IVF search (driver-side, over
+    the k-row centroid table)."""
     import numpy as np
 
     q = np.asarray(query, dtype=float)
     dists = [float(np.linalg.norm(np.asarray(c) - q)) for c in centroids]
-    probe = sorted(np.argsort(dists)[:nprobe].tolist())
-    pruned = assigned_df.filter(F.col("_centroid").isin(probe))
-    return cosine_topk(pruned, query, k, vec_col, id_col)
+    return sorted(np.argsort(dists)[:nprobe].tolist())
 
 
 # -- IVF index lifecycle: persist / reopen / incremental add ----------------
@@ -205,23 +215,42 @@ def ivf_index_write(assigned: DataFrame, centroids: list[list[float]],
     ``mode="append"`` adds a batch that was assigned with
     :func:`ivf_assign` against the SAME centroids — partition layout
     aligns automatically because the centroid id is the partition key."""
-    spark = assigned.sparkSession
-    assigned.write.mode(mode).partitionBy("_centroid") \
-        .parquet(f"{path}/vectors")
+    _write_parts({"vectors": assigned}, path, mode, key="_centroid")
     if mode == "overwrite":
-        rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-        spark.createDataFrame(rows, "_centroid int, center array<double>") \
-            .coalesce(1).write.mode("overwrite") \
-            .parquet(f"{path}/centroids")
+        ivf_init(assigned.sparkSession, path, centroids)
 
 
 def ivf_index_read(spark, path: str):
     """Reopen a persisted IVF index -> (assigned_df, centroids). The
+    vectors keep the caller's columns, so their schema is inferred; the
     centroid table is k rows — one bounded collect."""
-    assigned = spark.read.parquet(f"{path}/vectors")
-    cents = spark.read.parquet(f"{path}/centroids") \
-        .orderBy("_centroid").collect()
-    return assigned, [list(r["center"]) for r in cents]
+    return spark.read.parquet(f"{path}/vectors"), _read_centroids(spark, path)
+
+
+#: the declared schemas of the vector index's small tables; each row's
+#: leading columns are its unique key
+_TABLES = {"centroids": "_centroid int, center array<double>",
+           "codebooks": "subspace int, code int, center array<double>"}
+
+
+def _write_table(spark, path: str, table: str, rows: list) -> None:
+    """Overwrite the small ``table`` of the vector index at ``path``
+    with ``rows``, as one file."""
+    df = spark.createDataFrame(rows, _TABLES[table]).coalesce(1)
+    _write_parts({table: df}, path, "overwrite")
+
+
+def _read_table(spark, path: str, table: str) -> list:
+    """The rows of the small ``table`` of the vector index at ``path``
+    in key order: read with its declared schema and sorted on the
+    driver, so the read is one single-stage job."""
+    return sorted(spark.read.schema(_TABLES[table])
+                  .parquet(f"{path.rstrip('/')}/{table}").collect())
+
+
+def _read_centroids(spark, path: str) -> list[list[float]]:
+    """The centroids of the vector index at ``path``, in id order."""
+    return [list(r["center"]) for r in _read_table(spark, path, "centroids")]
 
 
 #: centroid count above which ivf_assign switches from per-centroid
@@ -304,7 +333,7 @@ def ivf_index_append(spark, path: str, new_vecs: DataFrame,
                      vec_col: str = "embedding") -> None:
     """Incremental add: assign ``new_vecs`` against the index's OWN
     persisted centroids and append — O(batch), history untouched."""
-    _, centroids = ivf_index_read(spark, path)
+    centroids = _read_centroids(spark, path)
     ivf_index_write(ivf_assign(new_vecs, centroids, vec_col), centroids,
                     path, mode="append")
 
@@ -743,7 +772,6 @@ def ivfpq_index_write(df: DataFrame, path: str,
     dimension. Layout: ``<path>/codes`` (bucketed rows),
     ``<path>/centroids`` (k rows), ``<path>/codebooks``
     (m*ksub rows: subspace, code, center)."""
-    spark = df.sparkSession
     assigned, centroids = ivf_build(df, vec_col=vec_col,
                                     num_centroids=num_centroids, seed=seed,
                                     sample_fraction=sample_fraction)
@@ -751,18 +779,12 @@ def ivfpq_index_write(df: DataFrame, path: str,
     books = pq_train(resid, vec_col="_resid", m=m, ksub=ksub, seed=seed,
                      sample_fraction=sample_fraction)
     codes = pq_encode(resid, books, vec_col="_resid")
-    (codes.select(id_col, "_centroid", "pq_code")
-     .write.mode("overwrite").partitionBy("_centroid")
-     .parquet(f"{path}/codes"))
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "_centroid int, center array<double>") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    rows = [(j, c, books[j][c]) for j in range(m)
-            for c in range(len(books[j]))]
-    spark.createDataFrame(
-        rows, "subspace int, code int, center array<double>") \
-        .coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _write_parts({"codes": codes.select(id_col, "_centroid", "pq_code")},
+                 path, "overwrite", key="_centroid")
+    ivf_init(df.sparkSession, path, centroids)
+    _write_table(df.sparkSession, path, "codebooks",
+                 [(j, c, books[j][c]) for j in range(m)
+                  for c in range(len(books[j]))])
 
 
 def ivfpq_index_append(spark, path: str, new_vecs: DataFrame,
@@ -773,28 +795,31 @@ def ivfpq_index_append(spark, path: str, new_vecs: DataFrame,
     (:func:`ivf_assign`, no refit), encode residuals against the
     EXISTING codebooks, append to the codes partitions — O(batch),
     history untouched."""
-    codes_df, centroids, books = ivfpq_index_read(spark, path)
+    centroids = _read_centroids(spark, path)
+    books = _read_codebooks(spark, path)
     assigned = ivf_assign(new_vecs, centroids, vec_col)
     resid = _residuals(assigned, centroids, vec_col)
-    (pq_encode(resid, books, vec_col="_resid")
-     .select(id_col, "_centroid", "pq_code")
-     .write.mode("append").partitionBy("_centroid")
-     .parquet(f"{path}/codes"))
+    codes = pq_encode(resid, books, vec_col="_resid")
+    _write_parts({"codes": codes.select(id_col, "_centroid", "pq_code")},
+                 path, "append", key="_centroid")
 
 
 def ivfpq_index_read(spark, path: str):
-    """Reopen -> (codes_df, centroids, codebooks). Centroid and codebook
-    tables are k and m*ksub rows — bounded collects."""
-    codes = spark.read.parquet(f"{path}/codes")
-    cents = spark.read.parquet(f"{path}/centroids") \
-        .orderBy("_centroid").collect()
-    cb_rows = spark.read.parquet(f"{path}/codebooks") \
-        .orderBy("subspace", "code").collect()
-    m = 1 + max(r["subspace"] for r in cb_rows)
-    books: list[list[list[float]]] = [[] for _ in range(m)]
-    for r in cb_rows:
+    """Reopen -> (codes_df, centroids, codebooks). The codes keep the
+    caller's id column, so their schema is inferred; centroid and
+    codebook tables are k and m*ksub rows — bounded collects."""
+    return (spark.read.parquet(f"{path}/codes"),
+            _read_centroids(spark, path), _read_codebooks(spark, path))
+
+
+def _read_codebooks(spark, path: str) -> list[list[list[float]]]:
+    """The per-subspace codebooks of the IVF-PQ index at ``path``."""
+    rows = _read_table(spark, path, "codebooks")
+    books: list[list[list[float]]] = [
+        [] for _ in range(1 + max(r["subspace"] for r in rows))]
+    for r in rows:
         books[r["subspace"]].append([float(x) for x in r["center"]])
-    return codes, [list(r["center"]) for r in cents], books
+    return books
 
 
 def ivfpq_topk(codes_df: DataFrame, centroids: list[list[float]],
@@ -815,8 +840,7 @@ def ivfpq_topk(codes_df: DataFrame, centroids: list[list[float]],
     from pyspark.sql import types as T
 
     q = np.asarray(query, dtype=np.float64)
-    dists = [float(np.linalg.norm(np.asarray(c) - q)) for c in centroids]
-    probe = sorted(np.argsort(dists)[:nprobe].tolist())
+    probe = _nearest_centroids(centroids, query, nprobe)
     luts = {c: pq_adc_lut(codebooks, (q - np.asarray(centroids[c])).tolist())
             for c in probe}
     bc = codes_df.sparkSession.sparkContext.broadcast(luts)
@@ -876,25 +900,12 @@ def ivfpq_refine(shortlist: DataFrame, vectors: DataFrame,
 
 
 # -- IVF index maintenance: tombstone deletion + compaction -----------------
-# The vector twin of the text index's delete lifecycle
-# (operators/indexing.py:delete_from_index): takedowns and
-# decontamination hits carry embeddings too, and they must come out of
-# an already-built ANN index without a refit. Unlike BM25 there are no
-# corpus statistics to correct — cosine/L2 score one vector at a time —
-# so a tombstone here is just the id.
-
-def _ivf_tombstones(spark, path: str):
-    """The index's deduplicated tombstone ids from ``<path>/deletes``,
-    or None when no delete was ever issued. Probed with one Hadoop
-    ``exists`` and read with the declared ``vec_id bigint`` schema, so
-    opening the tombstones launches no schema-inference job."""
-    from etl_mark1_spark.operators.indexing import _exists
-
-    deletes = path.rstrip("/") + "/deletes"
-    if not _exists(spark, deletes):
-        return None
-    return spark.read.schema("vec_id bigint").parquet(deletes).distinct()
-
+# Takedowns and decontamination hits carry embeddings too, and they must
+# come out of an already-built ANN index without a refit. The tombstones
+# and the live anti-join are the shared segment layout's
+# (operators/segments.py). Unlike BM25 there are no corpus statistics to
+# correct — cosine/L2 score one vector at a time — so a tombstone here is
+# just the id.
 
 def ivf_delete(spark, path: str, vec_ids) -> None:
     """Tombstone deletion for a persisted IVF index: appends vec_id
@@ -903,10 +914,10 @@ def ivf_delete(spark, path: str, vec_ids) -> None:
     (:func:`ivf_read_live` / :func:`ivf_topk_persisted`) anti-joins the
     broadcast takedown-sized set, so delete-then-probe equals
     build-from-surviving-vectors exactly — a full-probe query returns
-    the exact top-k over survivors with no rebuild. Double deletes
-    dedup at read; re-ingesting a deleted id is UNDEFINED until
-    :func:`ivf_compact`. ``vec_ids`` is a DataFrame with a ``vec_id``
-    column or a list of ids."""
+    the exact top-k over survivors with no rebuild. A double delete
+    leaves a duplicate id, which the anti-join ignores; re-ingesting a
+    deleted id is UNDEFINED until :func:`ivf_compact`. ``vec_ids`` is a
+    DataFrame with a ``vec_id`` column or a list of ids."""
     if isinstance(vec_ids, DataFrame):
         rows = vec_ids.select(F.col("vec_id").cast("bigint")).distinct()
     else:
@@ -915,7 +926,7 @@ def ivf_delete(spark, path: str, vec_ids) -> None:
             raise ValueError("ivf_delete needs at least one vec_id")
         rows = spark.createDataFrame([(i,) for i in ids],
                                      "vec_id bigint")
-    rows.write.mode("append").parquet(path.rstrip("/") + "/deletes")
+    _write_parts({"deletes": rows}, path, "append")
 
 
 def ivf_read_live(spark, path: str):
@@ -925,10 +936,7 @@ def ivf_read_live(spark, path: str):
     probe path is untouched (the filter composes with the partition
     filter — pinned in tests)."""
     assigned, centroids = ivf_index_read(spark, path)
-    tomb = _ivf_tombstones(spark, path)
-    if tomb is not None:
-        assigned = assigned.join(F.broadcast(tomb), "vec_id", "left_anti")
-    return assigned, centroids
+    return _live(spark, path, assigned, "vec_id"), centroids
 
 
 def ivf_topk_persisted(spark, path: str, query: list[float], k: int = 10,
@@ -947,10 +955,8 @@ def ivf_compact(spark, path: str, dest: str) -> None:
     rewrite to ``dest`` under the SAME centroids (no refit — centroid
     geometry is unchanged by deletion; recall characteristics are
     preserved and appends keep composing), with no deletes directory,
-    so probes at ``dest`` take the anti-join-free fast path. Same
-    immutable-segment discipline as the text index's compaction
-    (operators/indexing.py:compact_index): ``dest`` must be a NEW
-    path."""
+    so probes at ``dest`` take the anti-join-free fast path. ``dest``
+    must be a NEW path (immutable-segment discipline)."""
     live, centroids = ivf_read_live(spark, path)
     ivf_index_write(live, centroids, dest, mode="overwrite")
 
@@ -959,32 +965,24 @@ def ivf_write_segment(assigned: DataFrame, path: str, seg: str) -> None:
     """IDEMPOTENT vector-segment write for streaming ingest
     (streaming/events.py:ivf_ingest_sink): the assigned batch lands
     partitioned by (``_centroid``, ``seg``) with DYNAMIC partition
-    overwrite — re-running the same (batch, seg) replaces exactly its
-    own partitions instead of double-appending, the same structural
-    replay idempotence as the text index's
-    write_search_index_segment. The ``seg`` column rides harmlessly at
-    probe time (probes filter on ``_centroid``, which stays the
-    leading partition key, so centroid pruning is unchanged — pinned
-    in tests). Do not mix this layout with plain
+    overwrite, so re-running the same (batch, seg) replaces exactly its
+    own partitions instead of double-appending. The ``seg`` column
+    rides harmlessly at probe time (probes filter on ``_centroid``,
+    which stays the leading partition key, so centroid pruning is
+    unchanged — pinned in tests). Do not mix this layout with plain
     :func:`ivf_index_write` appends under one path (partition
     discovery needs consistent partition columns); the centroid table
-    must already exist at ``path`` (seed it with
-    :func:`ivf_init`)."""
-    (assigned.withColumn("seg", F.lit(seg))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("_centroid", "seg")
-     .parquet(path.rstrip("/") + "/vectors"))
+    must already exist at ``path`` (seed it with :func:`ivf_init`)."""
+    _write_parts({"vectors": assigned}, path, "overwrite", "_centroid", seg)
 
 
 def ivf_init(spark, path: str, centroids: list[list[float]]) -> None:
-    """Seed a streaming-ingested IVF index: write ONLY the centroid
-    table (k rows). Batches then stream in via
-    :func:`ivf_write_segment` / streaming/events.py:ivf_ingest_sink,
-    each assigned map-side against these fixed centroids — the
-    bootstrap-then-stream shape (fit centroids once on a
-    representative sample; never refit per batch)."""
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
-    spark.createDataFrame(rows, "_centroid int, center array<double>") \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(path.rstrip("/") + "/centroids")
+    """Write the centroid table (k rows) of the IVF index at ``path`` —
+    its one writer. Seeding a streaming-ingested index writes ONLY this
+    table; batches then stream in via :func:`ivf_write_segment` /
+    streaming/events.py:ivf_ingest_sink, each assigned map-side against
+    these fixed centroids — the bootstrap-then-stream shape (fit
+    centroids once on a representative sample; never refit per
+    batch)."""
+    _write_table(spark, path, "centroids",
+                 [(i, [float(x) for x in c]) for i, c in enumerate(centroids)])

@@ -394,6 +394,41 @@ def sessionize(events: DataFrame, gap_minutes: int = 30,
     )
 
 
+def _drain(stream_df: DataFrame, checkpoint: str | None,
+           apply_batch) -> None:
+    """Drain everything currently available in ``stream_df``
+    (AvailableNow) through ``apply_batch(batch, tag, epoch_id)`` and
+    return — the one foreachBatch driver of the sinks below.
+    ``checkpoint`` defaults to a fresh temp directory. ``tag`` is the
+    first 12 hex digits of the sha256 of the checkpoint's absolute
+    path: epoch ids restart at 0 with every new checkpoint, so a sink
+    that keys a commit on the epoch keys it on (tag, epoch) to keep
+    distinct lineages from colliding while a true same-checkpoint
+    replay still matches."""
+    checkpoint = checkpoint or tempfile.mkdtemp(prefix="etl_mark1_ckpt_")
+    tag = hashlib.sha256(
+        os.path.abspath(checkpoint).encode()).hexdigest()[:12]
+    (stream_df.writeStream
+     .foreachBatch(lambda batch, epoch_id: apply_batch(batch, tag, epoch_id))
+     .option("checkpointLocation", checkpoint)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+
+
+def _commit_once(df: DataFrame, table_dir: str, note: str) -> None:
+    """Commit ``df`` as the next version of the versioned table at
+    ``table_dir`` (sources/versioned.py) under ``note`` — or skip it
+    when a version with that note already exists: the batch is a
+    replay of an epoch committed before the checkpoint advanced."""
+    from etl_mark1_spark.sources.versioned import history, write_version
+
+    if not os.path.exists(os.path.join(table_dir, "_MANIFEST.json")):
+        write_version(df, table_dir, mode="overwrite", note=note)
+    elif not any(v.get("note") == note for v in history(table_dir)):
+        write_version(df, table_dir, mode="append", note=note)
+
+
 def upsert_sink(stream_df: DataFrame, path: str, key_cols: list[str],
                 checkpoint: str | None = None) -> None:
     """Stream into a keyed parquet table with MERGE semantics: each
@@ -415,9 +450,7 @@ def upsert_sink(stream_df: DataFrame, path: str, key_cols: list[str],
 
     from etl_mark1_spark.operators.cdc import upsert
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="etl_mark1_ckpt_")
-
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
+    def apply_batch(batch: DataFrame, tag: str, epoch_id: int) -> None:
         spark = batch.sparkSession
         jvm = spark._jvm
         fs_path = jvm.org.apache.hadoop.fs.Path(path)
@@ -443,11 +476,7 @@ def upsert_sink(stream_df: DataFrame, path: str, key_cols: list[str],
         fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), fs_path)
         fs.delete(trash, True)
 
-    (stream_df.writeStream.foreachBatch(apply_batch)
-     .option("checkpointLocation", checkpoint)
-     .trigger(availableNow=True)
-     .start()
-     .awaitTermination())
+    _drain(stream_df, checkpoint, apply_batch)
 
 
 def correlate_streams(left: DataFrame, right: DataFrame,
@@ -496,43 +525,18 @@ def versioned_sink(stream_df: DataFrame, table_dir: str,
     ingestion shape without Delta jars.
 
     Exactly-once by construction: the commit note carries BOTH the epoch
-    id and a hash of the checkpoint path, so a replayed batch (restart
-    from the SAME checkpoint between version-commit and checkpoint
-    advance) is detectable and skipped rather than double-appended —
-    the standard foreachBatch idempotence discipline. Epoch ids are only
-    meaningful within one checkpoint's lineage: a drain with a fresh
-    (e.g. default temp-dir) checkpoint restarts them at 0, and a note
-    keyed on the epoch alone would match the previous drain's
-    ``stream_epoch:0`` and silently DROP the new batch; the checkpoint
-    tag makes distinct lineages (and two different streams sharing one
-    table) non-colliding while keeping true same-checkpoint replays
-    idempotent. Drains everything currently available (AvailableNow)
-    and returns.
+    id and the checkpoint tag (:func:`_drain`), so a replayed batch
+    (restart from the SAME checkpoint between version-commit and
+    checkpoint advance) is skipped rather than double-appended
+    (:func:`_commit_once`), while a drain with a fresh checkpoint, whose
+    epochs restart at 0, or a second stream sharing the table never
+    matches another lineage's notes. Drains everything currently
+    available (AvailableNow) and returns.
     """
-    import hashlib
-    import os
+    def apply_batch(batch: DataFrame, tag: str, epoch_id: int) -> None:
+        _commit_once(batch, table_dir, f"{note_prefix}:{tag}:{epoch_id}")
 
-    from etl_mark1_spark.sources.versioned import history, write_version
-
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="etl_mark1_ckpt_")
-    ckpt_tag = hashlib.sha256(
-        os.path.abspath(checkpoint).encode()).hexdigest()[:12]
-
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
-        note = f"{note_prefix}:{ckpt_tag}:{epoch_id}"
-        if os.path.exists(os.path.join(table_dir, "_MANIFEST.json")):
-            if any(v.get("note") == note for v in history(table_dir)):
-                return                        # replayed epoch: skip
-            mode = "append"
-        else:
-            mode = "overwrite"
-        write_version(batch, table_dir, mode=mode, note=note)
-
-    query = (stream_df.writeStream.foreachBatch(apply_batch)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True)
-             .start())
-    query.awaitTermination()
+    _drain(stream_df, checkpoint, apply_batch)
 
 
 def dedup_ingest_sink(stream_df: DataFrame, corpus_dir: str,
@@ -550,31 +554,17 @@ def dedup_ingest_sink(stream_df: DataFrame, corpus_dir: str,
     grown index, so near-duplicates are caught across the stream's whole
     lifetime without ever re-clustering the corpus.
 
-    Exactly-once on BOTH tables via versioned_sink's epoch-note
-    discipline (checkpoint-tagged epoch notes; a replayed batch between
-    version-commit and checkpoint advance is detected per-table, so a
-    crash after the corpus commit but before the index commit heals on
-    replay: the corpus append skips, the index append lands). Drains
-    with AvailableNow and returns."""
+    Exactly-once on BOTH tables via checkpoint-tagged epoch notes
+    (:func:`_commit_once`; a replayed batch between version-commit and
+    checkpoint advance is detected per-table, so a crash after the
+    corpus commit but before the index commit heals on replay: the
+    corpus append skips, the index append lands). Drains with
+    AvailableNow and returns."""
     from etl_mark1_spark.operators.incremental import (incremental_neardup,
                                                        minhash_index)
-    from etl_mark1_spark.sources.versioned import (history,
-                                                   read_table,
-                                                   write_version)
+    from etl_mark1_spark.sources.versioned import read_table
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="etl_mark1_ckpt_")
-    ckpt_tag = hashlib.sha256(
-        os.path.abspath(checkpoint).encode()).hexdigest()[:12]
-
-    def _commit(df: DataFrame, table_dir: str, note: str) -> None:
-        if os.path.exists(os.path.join(table_dir, "_MANIFEST.json")):
-            if any(v.get("note") == note for v in history(table_dir)):
-                return                        # replayed epoch: skip
-            write_version(df, table_dir, mode="append", note=note)
-        else:
-            write_version(df, table_dir, mode="overwrite", note=note)
-
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
+    def apply_batch(batch: DataFrame, tag: str, epoch_id: int) -> None:
         docs = batch.select(id_col, text_col)
         spark = docs.sparkSession
 
@@ -596,15 +586,12 @@ def dedup_ingest_sink(stream_df: DataFrame, corpus_dir: str,
         accepted = docs.join(
             verdicts.filter(F.col("dup_of").isNull()).select(id_col),
             id_col, "left_semi")
-        note = f"{note_prefix}:{ckpt_tag}:{epoch_id}"
-        _commit(accepted, corpus_dir, note)
-        _commit(minhash_index(accepted, text_col, id_col), index_dir, note)
+        note = f"{note_prefix}:{tag}:{epoch_id}"
+        _commit_once(accepted, corpus_dir, note)
+        _commit_once(minhash_index(accepted, text_col, id_col), index_dir,
+                     note)
 
-    query = (stream_df.writeStream.foreachBatch(apply_batch)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True)
-             .start())
-    query.awaitTermination()
+    _drain(stream_df, checkpoint, apply_batch)
 
 
 def index_ingest_sink(stream_df: DataFrame, index_dir: str,
@@ -624,32 +611,23 @@ def index_ingest_sink(stream_df: DataFrame, index_dir: str,
     and written with DYNAMIC partition overwrite, so a replayed epoch
     (crash between data write and checkpoint advance) REWRITES exactly
     its own partitions instead of double-appending — f(batch) twice ==
-    once, structurally. The checkpoint tag serves the same
-    lineage-disambiguation role as versioned_sink's epoch notes: two
-    drains with fresh checkpoints both restart epochs at 0, and
-    untagged segment ids would collide and silently overwrite the
-    earlier drain's batch. Drains AvailableNow and returns. Batches
+    once, structurally. The checkpoint tag (:func:`_drain`) keeps two
+    drains with fresh checkpoints from overwriting each other's
+    segments. Drains AvailableNow and returns. Batches
     must be document-disjoint across the stream's lifetime (standard
     segment discipline; re-ingest belongs to compact_index)."""
     from etl_mark1_spark.operators.indexing import (DEFAULT_BUCKETS,
                                                     write_search_index_segment)
 
     nb = DEFAULT_BUCKETS if num_buckets is None else num_buckets
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="etl_mark1_ckpt_")
-    ckpt_tag = hashlib.sha256(
-        os.path.abspath(checkpoint).encode()).hexdigest()[:12]
 
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
+    def apply_batch(batch: DataFrame, tag: str, epoch_id: int) -> None:
         write_search_index_segment(
             batch.select(id_col, text_col), index_dir,
-            seg=f"{ckpt_tag}-{epoch_id}", text_col=text_col,
+            seg=f"{tag}-{epoch_id}", text_col=text_col,
             id_col=id_col, num_buckets=nb)
 
-    query = (stream_df.writeStream.foreachBatch(apply_batch)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True)
-             .start())
-    query.awaitTermination()
+    _drain(stream_df, checkpoint, apply_batch)
 
 
 def interval_join_streams(left: DataFrame, right: DataFrame,
@@ -679,9 +657,8 @@ def ivf_ingest_sink(stream_df: DataFrame, index_dir: str,
                     checkpoint: str | None = None, *,
                     vec_col: str = "embedding",
                     id_col: str = "vec_id") -> None:
-    """Streaming ingest INTO the persisted VECTOR index — the embedding
-    twin of :func:`index_ingest_sink`, completing the
-    crawl-to-searchable-corpus path for BOTH retrieval modalities: each
+    """Streaming ingest INTO the persisted VECTOR index, the
+    crawl-to-searchable-corpus path for embeddings: each
     micro-batch is assigned map-side against the index's FIXED
     centroids (seeded once by operators/similarity.py:ivf_init — fit on
     a representative sample, never refit per batch, so assignment is a
@@ -691,34 +668,25 @@ def ivf_ingest_sink(stream_df: DataFrame, index_dir: str,
     to a batch-built index over the same vectors (full-probe exactness
     pinned by the ``streaming_ivf_ingest_topk`` oracle).
 
-    Replay idempotence is structural, same design as the text sink:
-    the segment id derives from (checkpoint tag, epoch id) and the
-    write uses dynamic partition overwrite, so a replayed epoch
+    Replay idempotence is structural: the segment id derives from
+    (checkpoint tag, epoch id) and the write uses dynamic partition
+    overwrite (operators/segments.py), so a replayed epoch
     rewrites exactly its own partitions. Batches must be id-disjoint
     across the stream's lifetime; deletions compose via
     operators/similarity.py:ivf_delete unchanged."""
-    from etl_mark1_spark.operators.similarity import (ivf_assign,
+    from etl_mark1_spark.operators.similarity import (_read_centroids,
+                                                      ivf_assign,
                                                       ivf_write_segment)
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="etl_mark1_ckpt_")
-    ckpt_tag = hashlib.sha256(
-        os.path.abspath(checkpoint).encode()).hexdigest()[:12]
-    # centroid table only (k rows, read once per drain, driver-side) —
-    # NOT ivf_index_read: before the first drain the index has
-    # centroids but no vectors directory yet
-    spark = stream_df.sparkSession
-    cents = (spark.read.parquet(index_dir.rstrip("/") + "/centroids")
-             .orderBy("_centroid").collect())
-    centroids = [list(r["center"]) for r in cents]
+    # centroid table only, read once per drain — NOT ivf_index_read:
+    # before the first drain the index has centroids but no vectors
+    # directory yet
+    centroids = _read_centroids(stream_df.sparkSession, index_dir)
 
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
+    def apply_batch(batch: DataFrame, tag: str, epoch_id: int) -> None:
         ivf_write_segment(
             ivf_assign(batch.select(id_col, vec_col), centroids,
                        vec_col=vec_col),
-            index_dir, seg=f"{ckpt_tag}-{epoch_id}")
+            index_dir, seg=f"{tag}-{epoch_id}")
 
-    query = (stream_df.writeStream.foreachBatch(apply_batch)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True)
-             .start())
-    query.awaitTermination()
+    _drain(stream_df, checkpoint, apply_batch)

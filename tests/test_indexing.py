@@ -540,9 +540,9 @@ def test_delete_then_query_equals_build_from_survivors(spark, tmp_path):
     path = str(tmp_path / "didx")
     docs = _docs(spark)
     write_search_index(docs, path, num_buckets=8)
-    delete_from_index(spark, path, [1, 4], num_buckets=8)
+    delete_from_index(spark, path, [1, 4])
     # double delete + an id the index never held
-    delete_from_index(spark, path, [4, 999], num_buckets=8)
+    delete_from_index(spark, path, [4, 999])
     surviving = docs.filter(~F.col("doc_id").isin([1, 4]))
     want = [(r["doc_id"], r["bm25"]) for r in
             bm25_topk(surviving, ["lazy", "fox"], top_k=5).collect()]
@@ -565,7 +565,7 @@ def test_delete_everything_raises_clearly(spark, tmp_path):
 
     path = str(tmp_path / "didx_all")
     write_search_index(_docs(spark, [(1, "only doc")]), path, num_buckets=8)
-    delete_from_index(spark, path, [1], num_buckets=8)
+    delete_from_index(spark, path, [1])
     with pytest.raises(ValueError, match="no surviving documents"):
         bm25_search_persisted(spark, path, ["only"], num_buckets=8)
 
@@ -584,7 +584,7 @@ def test_compact_applies_tombstones_and_queries_skip_them(spark, tmp_path):
     docs = _docs(spark)
     write_search_index(docs.filter(F.col("doc_id") <= 3), src, num_buckets=8)
     write_search_index(docs.filter(F.col("doc_id") > 3), src, num_buckets=8)
-    delete_from_index(spark, src, [1], num_buckets=8)
+    delete_from_index(spark, src, [1])
     want = [(r["doc_id"], r["bm25"]) for r in
             bm25_search_persisted(spark, src, ["lazy", "fox"], top_k=5,
                                   num_buckets=8).collect()]
@@ -622,7 +622,7 @@ def test_compact_carries_positions(spark, tmp_path):
     docs = _docs(spark)
     write_search_index(docs, src, num_buckets=8)
     write_position_index(docs, src, num_buckets=8)
-    delete_from_index(spark, src, [1], num_buckets=8)
+    delete_from_index(spark, src, [1])
     compact_index(spark, src, dst, num_buckets=8)
     got = {r["doc_id"]: r["n_matches"] for r in
            phrase_search_persisted(spark, dst, ["lazy", "dog"],
@@ -667,7 +667,7 @@ def test_positional_persisted_parity_and_pruning(spark, tmp_path):
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(bucket" in plan, plan
     # tombstones hide a doc's positions too
-    delete_from_index(spark, path, [1], num_buckets=8)
+    delete_from_index(spark, path, [1])
     after = {r["doc_id"]: r["n_matches"] for r in
              phrase_search_persisted(spark, path, ["quick", "brown"],
                                      num_buckets=8).collect()}
@@ -790,7 +790,7 @@ def test_qlm_persisted_matches_in_memory_path(spark, tmp_path):
                                 mu=50.0, num_buckets=8).collect()]
     assert got == want
     # tombstones: equals the in-memory path over the SURVIVING corpus
-    delete_from_index(spark, path, [4], num_buckets=8)
+    delete_from_index(spark, path, [4])
     surv = docs.filter(F.col("doc_id") != 4)
     ps = build_postings(surv)
     dls = ps.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
@@ -886,9 +886,10 @@ def test_index_ingest_sink_two_drains_and_replay(spark, tmp_path):
 
 # -- declared artifact schemas and the per-query job budget ------------------
 
-def _job_stages(spark, run):
+def _job_stages(spark, run, all_stages=False):
     """The first stage name of each job ``run()`` launches, in job order
-    (a job group scopes the jobs to this call)."""
+    (a job group scopes the jobs to this call); with ``all_stages``,
+    each job's list of stage names instead."""
     import uuid
 
     sc = spark.sparkContext
@@ -903,7 +904,8 @@ def _job_stages(spark, run):
     for job in sorted(tracker.getJobIdsForGroup(group)):
         stages = [tracker.getStageInfo(s)
                   for s in sorted(tracker.getJobInfo(job).stageIds)]
-        names.append(next((s.name for s in stages if s), "?"))
+        names.append([s.name for s in stages if s] if all_stages
+                     else next((s.name for s in stages if s), "?"))
     return names
 
 
@@ -954,7 +956,7 @@ def test_index_artifacts_use_declared_schemas(spark, tmp_path):
     flat, segs = str(tmp_path / "flat"), str(tmp_path / "segs")
     write_search_index(docs, flat, num_buckets=8)
     write_position_index(docs, flat, num_buckets=8)
-    delete_from_index(spark, flat, [1], num_buckets=8)
+    delete_from_index(spark, flat, [1])
     for part, cols in ARTIFACT_COLUMNS.items():
         on_disk = spark.read.parquet(f"{flat}/{part}").schema
         assert [(f.name, f.dataType.simpleString()) for f in on_disk
@@ -1035,7 +1037,7 @@ def test_index_writers_persist_identical_artifacts(spark, tmp_path):
                  docs.filter(F.col("doc_id") % 2 == 1)):
         write_search_index(part, src, num_buckets=8)
         write_position_index(part, src, num_buckets=8)
-    delete_from_index(spark, src, [1], num_buckets=8)
+    delete_from_index(spark, src, [1])
     compact_index(spark, src, packed, num_buckets=8)
 
     def stats(path):
@@ -1067,8 +1069,8 @@ def test_ivf_tombstone_read_launches_no_schema_inference_job(spark,
     launches no job, and a probe after ivf_delete launches no more
     ``parquet at`` jobs than the probe before it (the vector and
     centroid reads)."""
-    from etl_mark1_spark.operators.similarity import (_ivf_tombstones,
-                                                      ivf_build, ivf_delete,
+    from etl_mark1_spark.operators.segments import _read_tombstones
+    from etl_mark1_spark.operators.similarity import (ivf_build, ivf_delete,
                                                       ivf_index_write,
                                                       ivf_topk_persisted)
 
@@ -1085,10 +1087,61 @@ def test_ivf_tombstone_read_launches_no_schema_inference_job(spark,
 
     before = schema_jobs()
     ivf_delete(spark, path, vecs.filter(F.col("vec_id") < 3))
-    assert _job_stages(spark, lambda: _ivf_tombstones(spark, path)) == []
+    assert _job_stages(spark, lambda: _read_tombstones(
+        spark, path, "vec_id bigint")) == []
     assert schema_jobs() == before
     assert spark.read.parquet(path + "/deletes").schema.simpleString() \
         == "struct<vec_id:bigint>"
+
+
+def test_ivf_open_and_probe_stay_within_job_budget(spark, tmp_path):
+    """Opening a persisted vector index infers only the schema that has
+    no declaration: the vectors (or IVF-PQ codes), which keep the
+    caller's columns. The centroid table reads with its declared schema
+    as one single-stage job, and the tombstone broadcast reads the
+    deletes directly, with no aggregate or shuffle under it."""
+    from etl_mark1_spark.operators.similarity import (ivf_build, ivf_delete,
+                                                      ivf_index_read,
+                                                      ivf_index_write,
+                                                      ivf_topk_persisted,
+                                                      ivfpq_index_read,
+                                                      ivfpq_index_write)
+
+    vecs = spark.createDataFrame(_vec_rows(random.Random(3), 200),
+                                 "vec_id int, embedding array<double>")
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    assigned, cents = ivf_build(vecs, num_centroids=4, seed=1)
+    ivf_index_write(assigned, cents, ivf)
+    ivf_delete(spark, ivf, [0, 5, 9])
+    ivf_delete(spark, ivf, [5])  # a double delete
+
+    def schema_jobs(run):
+        return [s for s in _job_stages(spark, run)
+                if s.startswith("parquet at")]
+
+    probes = []
+
+    def probe():
+        probes.append(ivf_topk_persisted(spark, ivf, [0.1] * 8, k=5))
+        probes[-1].collect()
+
+    assert len(schema_jobs(probe)) == 1
+    jobs = _job_stages(spark, lambda: ivf_index_read(spark, ivf),
+                       all_stages=True)
+    assert [len(stages) for stages in jobs] == [1, 1], jobs
+    plan = probes[-1]._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    at = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
+    depth = len(lines[at]) - len(lines[at].lstrip(" :+-"))
+    below = []
+    for ln in lines[at + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+            break
+        below.append(ln)
+    assert below and not any("Exchange" in ln for ln in below), plan
+
+    ivfpq_index_write(vecs, pq, num_centroids=4, m=2, ksub=4, seed=1)
+    assert len(schema_jobs(lambda: ivfpq_index_read(spark, pq))) == 1
 
 
 def test_segment_report_hand_counted(spark):
@@ -1253,7 +1306,7 @@ def test_hybrid_text_vector_fusion_hand_computed(spark, tmp_path):
                                      top_k=10, num_buckets=16).collect()]
     assert got == want
     # takedown deleted from BOTH sides vanishes with no rebuild
-    delete_from_index(spark, tpath, [1], num_buckets=16)
+    delete_from_index(spark, tpath, [1])
     ivf_delete(spark, vpath, [1])
     fused = {r["doc_id"] for r in
              hybrid_text_vector_search(spark, tpath, vpath,

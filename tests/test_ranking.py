@@ -146,7 +146,7 @@ def test_rrf_persisted_matches_corpus_path_and_tombstones(spark, tmp_path):
            rrf_search_persisted(spark, path, terms, top_n=10, top_k=5,
                                 num_buckets=8).collect()]
     assert got == corpus_fusion(docs)
-    delete_from_index(spark, path, [2], num_buckets=8)
+    delete_from_index(spark, path, [2])
     got_d = [(r["doc_id"], r["rrf_score"]) for r in
              rrf_search_persisted(spark, path, terms, top_n=10, top_k=5,
                                   num_buckets=8).collect()]

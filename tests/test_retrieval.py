@@ -104,7 +104,7 @@ def test_boolean_honors_tombstones(spark, idx):
     """Deleting candidate doc 3 removes it AND re-corrects the corpus
     stats: the surviving candidate's score equals a fresh index built
     from the survivors."""
-    delete_from_index(spark, idx, [3], num_buckets=16)
+    delete_from_index(spark, idx, [3])
     got = [(r["doc_id"], r["bm25"]) for r in
            boolean_search_persisted(spark, idx, must=["lazy"],
                                     num_buckets=16).collect()]
@@ -402,7 +402,7 @@ def test_index_stats_hand_counted_and_tombstone_corrected(spark, idx):
     assert row["avgdl"] == round(total / 5, 6)
     # tombstones correct n_docs/avgdl exactly; vocab/posting counts stay
     # the documented ingest-time upper bound
-    delete_from_index(spark, idx, [4], num_buckets=16)
+    delete_from_index(spark, idx, [4])
     row2 = index_stats(spark, idx).collect()[0]
     assert row2["n_docs"] == 4
     assert row2["avgdl"] == round((total - len(TOKS[4])) / 4, 6)
