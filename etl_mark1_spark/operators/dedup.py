@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from etl_mark1_spark.functions.grams import (char_shingles, tokens,
                                              word_ngram_rows, word_ngrams)
+from etl_mark1_spark.operators.similarity import _rhp_signature, dot, l2_norm
 
 
 # --------------------------------------------------------------------------
@@ -187,51 +188,108 @@ def dedup_keep_best(df: DataFrame, key_col: str = "text",
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-def lsh_band_buckets(sig_col: Column | str, bands: int,
-                     rows_per_band: int) -> Column:
+def lsh_band_buckets(sig_col: str, bands: int, rows_per_band: int) -> Column:
     """Bucket ids: hash each band (slice of the signature) together with its
     band index so buckets from different bands never collide.
 
-    Pass the signature column's NAME to build the whole array as one
-    parsed SQL expression (round-13-opt): constructing ``bands`` nested
-    Column trees (lit + slice + transform-lambda + concat_ws + xxhash64
-    each) costs ~0.2 s of py4j round trips per call at 12 bands, all on
-    the DRIVER; one ``F.expr`` string parses JVM-side to the identical
-    analyzed plan."""
-    if isinstance(sig_col, str):
-        parts = ", ".join(
-            f"xxhash64({b}, concat_ws(',', transform("
-            f"slice({sig_col}, {b * rows_per_band + 1}, {rows_per_band}), "
-            f"x -> CAST(x AS STRING))))"
-            for b in range(bands))
-        return F.expr(f"array({parts})")
-    return F.array(*[
-        F.xxhash64(
-            F.lit(b),
-            F.concat_ws(",", F.transform(
-                F.slice(sig_col, b * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"),
-            )),
-        )
-        for b in range(bands)
-    ])
+    Built as one parsed SQL expression over the signature column's name:
+    ``bands`` nested Column trees (lit + slice + transform-lambda +
+    concat_ws + xxhash64 each) cost ~0.2 s of driver py4j round trips per
+    call at 12 bands, and parse JVM-side to the identical analyzed plan."""
+    parts = ", ".join(
+        f"xxhash64({b}, concat_ws(',', transform("
+        f"slice({sig_col}, {b * rows_per_band + 1}, {rows_per_band}), "
+        f"x -> CAST(x AS STRING))))"
+        for b in range(bands))
+    return F.expr(f"array({parts})")
 
 
-def minhash_sig_aggs(num_hashes: int, hashed_col: str = "_h") -> list[Column]:
-    """The ``num_hashes`` partial-min signature aggregates
-    (``min(xxhash64(hashed_col, i)) AS _mi``) as parsed SQL expressions —
-    one ``F.expr`` per seed instead of a 4-deep Column tree (round-13-opt:
-    the Column-tree construction measured ~0.5 s of driver py4j time per
-    call site at 48 hashes; the analyzed plan is identical)."""
-    return [F.expr(f"min(xxhash64({hashed_col}, {i})) AS _m{i}")
-            for i in range(num_hashes)]
+def _minhash_signatures(base: DataFrame, id_col: str,
+                        num_hashes: int) -> DataFrame:
+    """The one MinHash signature scheme: ``(id_col, _sh)`` shingle arrays in,
+    ``(id_col, _sig array<long>)`` out. Persisted ``minhash_index`` rows
+    depend on it, so changing it changes what an index stores.
 
-
-def minhash_sig_array(num_hashes: int) -> Column:
-    """``array(_m0, ..., _mN) AS _sig`` as one parsed expression (see
-    :func:`minhash_sig_aggs`)."""
+    Explode + flat min-aggregates rather than one giant nested-lambda
+    expression: ``num_hashes`` ``array_min(transform(...))`` columns blow
+    past the codegen size limit (interpreted fallback, MB-sized task
+    binaries); exploding shingles and taking ``num_hashes`` MIN aggregates
+    keeps every codegen unit small and gets map-side partial aggregation —
+    the shuffle carries one partial signature per (id, partition), not the
+    shingles. Each shingle is hashed to a long once and the hash family
+    rehashes that long per seed; ``array_distinct`` drops duplicate
+    shingles map-side first (they add nothing to a MIN but multiply the
+    rehash rows, ~20% of the hot stage on prose corpora). The aggregates
+    are parsed SQL strings, not 4-deep Column trees (~0.5 s of driver py4j
+    time per call at 48 hashes; the analyzed plan is identical)."""
+    hashed = base.select(
+        F.col(id_col),
+        F.explode(F.array_distinct(F.transform(
+            F.col("_sh"), lambda s: F.xxhash64(s)))).alias("_h"))
     names = ", ".join(f"_m{i}" for i in range(num_hashes))
-    return F.expr(f"array({names}) AS _sig")
+    return (hashed.groupBy(id_col)
+            .agg(*[F.expr(f"min(xxhash64(_h, {i})) AS _m{i}")
+                   for i in range(num_hashes)])
+            .select(F.col(id_col), F.expr(f"array({names}) AS _sig")))
+
+
+def _agreement_prefilter(sig_a: str, sig_b: str, num_hashes: int,
+               threshold: float) -> Column:
+    """Signature-agreement prefilter ahead of the exact verify: the share
+    of agreeing MinHash slots is an unbiased Jaccard estimate, so a pair
+    whose estimate is below ``threshold - 0.2`` (false-drop probability
+    ~1e-4 at 64 hashes) never touches the shingle sets. On template-heavy
+    corpora this cuts verify pairs by orders of magnitude, and at scale
+    the wide shingle arrays are only shuffled for the surviving pairs."""
+    agree = F.size(
+        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+                 lambda v: v == 1)
+    ) / F.lit(float(num_hashes))
+    return agree >= max(0.0, threshold - 0.2)
+
+
+def _verify_jaccard(pairs: DataFrame, a: str, b: str, sets_a: DataFrame,
+                    sets_b: DataFrame, threshold: float) -> DataFrame:
+    """Exact verify: ``pairs`` (columns ``a``, ``b``) joined to each side's
+    shingle sets — ``sets_a`` is ``(a, _sh)``, ``sets_b`` is ``(b, _sh)`` —
+    keeping the pairs whose exact Jaccard ``_j`` is >= ``threshold``. The
+    sketches only narrow candidates; this is the final word on membership."""
+    return (pairs
+            .join(sets_a.select(a, F.col("_sh").alias("_sh_a")), a)
+            .join(sets_b.select(b, F.col("_sh").alias("_sh_b")), b)
+            .withColumn("_j", jaccard(F.col("_sh_a"), F.col("_sh_b")))
+            .filter(F.col("_j") >= threshold))
+
+
+def _band_pairs(bucketed: DataFrame, id_col: str,
+                keys: tuple = ("_bucket",), carry: tuple = ()) -> DataFrame:
+    """Candidate pairs of a bucket self-join on ``keys``: one row per pair
+    with ``src < dst``, each ``carry`` column ``c`` riding along as ``ca``
+    (the src side) and ``cb`` (the dst side). The join shuffles on the
+    bucket; candidate volume is bounded by bucket sizes, never all-pairs."""
+    def side(name: str, tag: str) -> DataFrame:
+        return bucketed.select(F.col(id_col).alias(name),
+                               *[F.col(c).alias(c + tag) for c in carry],
+                               *keys)
+    return (side("src", "a").join(side("dst", "b"), list(keys))
+            .filter(F.col("src") < F.col("dst"))
+            .drop(*keys)
+            .dropDuplicates(["src", "dst"]))
+
+
+def _pigeonhole_buckets(hash_col: str, max_hamming: int) -> Column:
+    """Band a 64-bit fingerprint into ``max_hamming + 1`` tagged chunks
+    (pigeonhole: two fingerprints within ``max_hamming`` bits share at
+    least one identical chunk, since band-local differences cannot exceed
+    the total)."""
+    n_bands = max_hamming + 1
+    width = 64 // n_bands
+    return F.array(*[
+        F.concat_ws(":", F.lit(b),
+                    F.shiftrightunsigned(F.col(hash_col), b * width)
+                    .bitwiseAND(F.lit((1 << width) - 1)).cast("string"))
+        for b in range(n_bands)
+    ])
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -421,78 +479,28 @@ def minhash_dedup(
     )
     df = ensure_parallelism(df)
     base = df.select(F.col(id_col), shingle_expr.alias("_sh"))
-
-    # Signature via explode + flat min-aggregates rather than one giant
-    # nested-lambda expression: num_hashes array_min(transform(...)) columns
-    # blow past the codegen size limit (interpreted fallback, MB-sized task
-    # binaries); exploding shingles and taking num_hashes MIN aggregates
-    # keeps every codegen unit small and gets map-side partial aggregation —
-    # the shuffle carries one partial signature per (id, partition), not the
-    # shingles. Each shingle string is hashed to a long once; the hash
-    # family rehashes that long per seed.
-    # array_distinct before the explode: duplicate shingles within a doc
-    # contribute nothing to a MIN aggregate but multiply the rehash rows
-    # (~20% of the hot stage on prose corpora); dedup the hashed longs
-    # map-side, output identical.
-    hashed = base.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.transform(
-            F.col("_sh"), lambda s: F.xxhash64(s)))).alias("_h"),
-    )
-    sig = hashed.groupBy(id_col).agg(*minhash_sig_aggs(num_hashes))
     # signatures are tiny (num_hashes longs per doc): checkpoint so the
     # candidate, estimate, and verify stages don't re-run the shingle scan
-    sig_arr = sig.select(
-        F.col(id_col), minhash_sig_array(num_hashes)).localCheckpoint()
+    sig_arr = _minhash_signatures(base, id_col, num_hashes).localCheckpoint()
 
     # Bucket join carries only (id, bucket) — the heavy shingle arrays never
     # ride through the band explode/shuffle.
-    buckets = sig_arr.select(
+    candidates = _band_pairs(sig_arr.select(
         F.col(id_col),
-        F.explode(
-            lsh_band_buckets("_sig", bands, rows_per_band)
-        ).alias("_bucket"),
-    )
-    candidates = (
-        buckets.select(F.col(id_col).alias("src"), "_bucket")
-        .join(buckets.select(F.col(id_col).alias("dst"), "_bucket"), "_bucket")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-    )
-
-    # Cheap pre-filter before the expensive exact verify: the fraction of
-    # agreeing minhashes is an unbiased Jaccard estimate, so candidates that
-    # can't plausibly clear the threshold (est < threshold - 0.2; false-drop
-    # probability ~1e-4 at 64 hashes) never touch the shingle sets. On
-    # template-heavy corpora this cuts verify pairs by orders of magnitude —
-    # and at scale it means the wide shingle arrays are only shuffled for
-    # the handful of surviving pairs.
-    est_threshold = max(0.0, threshold - 0.2)
-    agree = F.size(
-        F.filter(F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
-                 lambda v: v == 1)
-    ) / F.lit(float(num_hashes))
+        F.explode(lsh_band_buckets("_sig", bands, rows_per_band))
+        .alias("_bucket")), id_col)
     plausible = (
         candidates
         .join(sig_arr.select(F.col(id_col).alias("src"),
                              F.col("_sig").alias("_sa")), "src")
         .join(sig_arr.select(F.col(id_col).alias("dst"),
                              F.col("_sig").alias("_sb")), "dst")
-        .filter(agree >= est_threshold)
+        .filter(_agreement_prefilter("_sa", "_sb", num_hashes, threshold))
         .select("src", "dst")
     )
-
-    shingle_sets = base.select(id_col, "_sh")
-    verified = (
-        plausible
-        .join(shingle_sets.select(F.col(id_col).alias("src"),
-                                  F.col("_sh").alias("_sh_a")), "src")
-        .join(shingle_sets.select(F.col(id_col).alias("dst"),
-                                  F.col("_sh").alias("_sh_b")), "dst")
-        .filter(jaccard(F.col("_sh_a"), F.col("_sh_b")) >= threshold)
-        .select("src", "dst")
-    )
+    verified = _verify_jaccard(
+        plausible, "src", "dst", base.withColumnRenamed(id_col, "src"),
+        base.withColumnRenamed(id_col, "dst"), threshold).select("src", "dst")
 
     return _cluster_min_label(df.select(id_col), verified, id_col,
                               release_after_edges=(sig_arr,))
@@ -559,31 +567,17 @@ def hamming_neardup(hashed: DataFrame, hash_col: str, id_col: str,
     hamming distance JVM-side (``bit_count(xor)``), cluster by min label.
     Never all-pairs; candidate volume is bucket-bounded, the 100 TB shape.
     Returns (id_col, cluster_id)."""
-    n_bands = max_hamming + 1
-    width = 64 // n_bands
     # The fingerprint frame fans out three ways (self-join left/right +
     # the id universe below); without a checkpoint each reference re-runs
     # the upstream hashing lineage — for media fingerprints that means
     # re-decoding every payload 3x. The checkpoint holds only
     # (id, 8-byte hash) rows, so it stays tiny even at corpus scale.
-    sh = hashed.select(id_col, F.col(hash_col).alias("_sh")).localCheckpoint()
+    sh = hashed.select(id_col, F.col(hash_col).alias("_h")).localCheckpoint()
     bucketed = sh.select(
-        id_col, "_sh",
-        F.explode(F.array(*[
-            F.concat_ws(":", F.lit(b),
-                        F.shiftrightunsigned(F.col("_sh"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1)).cast("string"))
-            for b in range(n_bands)
-        ])).alias("_bucket"),
-    )
-    left = bucketed.select(F.col(id_col).alias("src"), F.col("_sh").alias("_ha"),
-                           "_bucket")
-    right = bucketed.select(F.col(id_col).alias("dst"), F.col("_sh").alias("_hb"),
-                            "_bucket")
+        id_col, "_h",
+        F.explode(_pigeonhole_buckets("_h", max_hamming)).alias("_bucket"))
     pairs = (
-        left.join(right, "_bucket")
-        .filter(F.col("src") < F.col("dst"))
-        .dropDuplicates(["src", "dst"])
+        _band_pairs(bucketed, id_col, carry=("_h",))
         .filter(F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))) <= max_hamming)
         .select("src", "dst")
     )
@@ -628,47 +622,17 @@ def embedding_neardup(df: DataFrame, vec_col: str = "embedding",
     planes = rng.standard_normal((num_tables, planes_per_table, dim))
 
     df = ensure_parallelism(df)
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-
-    def table_sig(table: int) -> Column:
-        bits = F.concat_ws("", *[
-            F.when(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.array(*[F.lit(float(p))
-                                  for p in planes[table][i]]),
-                        lambda x, y: x * y,
-                    ),
-                    F.lit(0.0), lambda a, x: a + x,
-                ) >= 0, F.lit("1")
-            ).otherwise(F.lit("0"))
-            for i in range(planes_per_table)
-        ])
-        return F.concat_ws(":", F.lit(table), bits)
-
+    vec = F.col(vec_col)
     base = df.select(
-        id_col, F.col(vec_col), norm.alias("_norm"),
-        F.explode(F.array(*[table_sig(t) for t in range(num_tables)])
-                  ).alias("_bucket"),
-    )
-
-    left = base.select(F.col(id_col).alias("src"), F.col(vec_col).alias("_va"),
-                       F.col("_norm").alias("_na"), "_bucket")
-    right = base.select(F.col(id_col).alias("dst"), F.col(vec_col).alias("_vb"),
-                        F.col("_norm").alias("_nb"), "_bucket")
-    dot = F.aggregate(
-        F.zip_with(F.transform(F.col("_va"), lambda x: x.cast("double")),
-                   F.transform(F.col("_vb"), lambda x: x.cast("double")),
-                   lambda x, y: x * y),
-        F.lit(0.0), lambda a, x: a + x,
+        id_col, vec.alias("_v"), l2_norm(vec).alias("_n"),
+        F.explode(F.array(*[
+            F.concat_ws(":", F.lit(t), _rhp_signature(vec, planes[t]))
+            for t in range(num_tables)])).alias("_bucket"),
     )
     pairs = (
-        left.join(right, "_bucket")
-        .filter(F.col("src") < F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .filter(dot / (F.col("_na") * F.col("_nb")) >= threshold)
+        _band_pairs(base, id_col, carry=("_v", "_n"))
+        .filter(dot(F.col("_va"), F.col("_vb"))
+                / (F.col("_na") * F.col("_nb")) >= threshold)
         .select("src", "dst")
     )
     return _cluster_min_label(df.select(id_col), pairs, id_col)
@@ -702,16 +666,10 @@ def minhash_cross_dedup(
     def prep(df: DataFrame, label: str) -> tuple[DataFrame, DataFrame]:
         base = ensure_parallelism(df).select(
             F.col(id_col).alias(label),
-            char_shingles(F.col(text_col), shingle_k).alias(f"_sh_{label}"))
-        hashed = base.select(
-            label,
-            F.explode(F.transform(F.col(f"_sh_{label}"),
-                                  lambda s: F.xxhash64(s))).alias("_h"))
-        sig = (hashed.groupBy(label).agg(*minhash_sig_aggs(num_hashes))
-               .select(label, minhash_sig_array(num_hashes)))
-        buckets = sig.select(label, F.explode(
-            lsh_band_buckets("_sig", bands, rows_per_band)
-        ).alias("_bucket"))
+            char_shingles(F.col(text_col), shingle_k).alias("_sh"))
+        buckets = _minhash_signatures(base, label, num_hashes).select(
+            label, F.explode(lsh_band_buckets("_sig", bands, rows_per_band))
+            .alias("_bucket"))
         return base, buckets
 
     corpus_base, corpus_buckets = prep(corpus, "src")
@@ -719,20 +677,15 @@ def minhash_cross_dedup(
 
     candidates = (corpus_buckets.join(ref_buckets, "_bucket")
                   .select("src", "ref").dropDuplicates(["src", "ref"]))
-    verified = (candidates
-                .join(corpus_base.select("src", "_sh_src"), "src")
-                .join(ref_base.select("ref", "_sh_ref"), "ref")
-                .select("src", "ref",
-                        jaccard(F.col("_sh_src"), F.col("_sh_ref"))
-                        .alias("jaccard"))
-                .filter(F.col("jaccard") >= threshold))
+    verified = _verify_jaccard(candidates, "src", "ref", corpus_base,
+                               ref_base, threshold).select("src", "ref", "_j")
     from pyspark.sql import Window as _W
-    w = _W.partitionBy("src").orderBy(F.col("jaccard").desc(), F.col("ref"))
+    w = _W.partitionBy("src").orderBy(F.col("_j").desc(), F.col("ref"))
     return (verified.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn")
             .select(F.col("src").alias(id_col),
                     F.col("ref").alias("matched_ref"),
-                    F.round("jaccard", 6).alias("jaccard")))
+                    F.round("_j", 6).alias("jaccard")))
 
 
 def broadcast_ngram_decontam(

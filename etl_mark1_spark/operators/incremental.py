@@ -23,9 +23,11 @@ Scale shapes:
 - Appending accepted rows to the index is an O(batch) versioned-table
   append (``sources/versioned.py``), not a rewrite.
 
-Parameters must match between index build and query — both default to
-``operators/dedup.py:minhash_dedup``'s 5-char shingles, 48 hashes,
-12 bands (s-curve ~0.54), exact-verify threshold 0.8.
+Index build and query must use the same parameters and the same
+signature scheme: ``operators/dedup.py:_minhash_signatures``, the one
+MinHash signature every near-dup operator shares, so changing it changes
+the persisted index rows. Both default to ``minhash_dedup``'s 5-char
+shingles, 48 hashes, 12 bands (s-curve ~0.54), exact-verify threshold 0.8.
 """
 
 from __future__ import annotations
@@ -34,10 +36,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_mark1_spark.functions.grams import char_shingles
-from etl_mark1_spark.operators.dedup import (ensure_parallelism, jaccard,
+from etl_mark1_spark.operators.dedup import (_agreement_prefilter,
+                                             _minhash_signatures,
+                                             _verify_jaccard,
+                                             ensure_parallelism,
                                              lsh_band_buckets,
-                                             minhash_sig_aggs,
-                                             minhash_sig_array)
+                                             release_checkpoint)
 
 __all__ = ["minhash_index", "incremental_neardup"]
 
@@ -51,28 +55,6 @@ def _materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
-def _signatures(df: DataFrame, text_col: str, id_col: str,
-                shingle_k: int, num_hashes: int) -> DataFrame:
-    """(id, _sig array<long>) via the explode + flat-min-aggregate scheme
-    of ``minhash_dedup`` (codegen-small, map-side partials; each shingle
-    hashed to a long once, the hash family rehashes the long per seed).
-    ``ensure_parallelism`` first — a compact parquet corpus is ONE split,
-    and without the fan-out the whole shingling stage runs on one core
-    (measured 16s -> 2s at sf0.1 on local[32])."""
-    base = ensure_parallelism(df).select(
-        F.col(id_col), char_shingles(F.col(text_col), shingle_k).alias("_sh"))
-    # array_distinct before the explode: duplicate shingles within a doc
-    # contribute nothing to a MIN aggregate but multiply the 48-rehash
-    # rows; deduping the (already-hashed) longs map-side cuts the hot
-    # stage ~20% on prose corpora, output identical.
-    hashed = base.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.transform(
-            F.col("_sh"), lambda s: F.xxhash64(s)))).alias("_h"))
-    sig = hashed.groupBy(id_col).agg(*minhash_sig_aggs(num_hashes))
-    return sig.select(F.col(id_col), minhash_sig_array(num_hashes))
-
-
 def minhash_index(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", *, shingle_k: int = 5,
                   num_hashes: int = 48, bands: int = 12) -> DataFrame:
@@ -81,7 +63,12 @@ def minhash_index(df: DataFrame, text_col: str = "text",
     ``sources/versioned.py`` (or plain parquet) and append accepted
     batches; ~0.5 KB/doc at the defaults."""
     rows_per_band = num_hashes // bands
-    sig = _signatures(df, text_col, id_col, shingle_k, num_hashes)
+    # ensure_parallelism first: a compact parquet corpus is ONE split, and
+    # without the fan-out the whole shingling stage runs on one core
+    # (measured 16s -> 2s at sf0.1 on local[32])
+    base = ensure_parallelism(df).select(
+        F.col(id_col), char_shingles(F.col(text_col), shingle_k).alias("_sh"))
+    sig = _minhash_signatures(base, id_col, num_hashes)
     return sig.select(
         F.col(id_col), F.col("_sig").alias("sig"),
         lsh_band_buckets("_sig", bands, rows_per_band).alias("buckets"))
@@ -115,13 +102,18 @@ def incremental_neardup(new_docs: DataFrame, index: DataFrame,
     "ingest the whole corpus as one batch" call degenerates to plain
     ``minhash_dedup`` cost with none of its clustering; bulk-load a
     corpus with ``operators/dedup.py:minhash_dedup`` instead and build
-    the index from the survivors."""
-    rows_per_band = num_hashes // bands
-    # batch signatures fan out to buckets, the estimate prefilter, and
-    # the id universe; tiny (48 longs/doc) -> checkpoint once
-    new_idx = minhash_index(new_docs, text_col, id_col,
-                            shingle_k=shingle_k, num_hashes=num_hashes,
-                            bands=bands).localCheckpoint()
+    the index from the survivors.
+
+    CALLER-OWNED STORAGE: the verdicts lean on two O(batch) candidate
+    checkpoints; consume them, then call ``release_checkpoint(result,
+    deep=True)`` (``streaming/events.py:dedup_ingest_sink`` does so after
+    each micro-batch's commits)."""
+    # batch signatures fan out to the history probe and both sides of the
+    # within-batch join; tiny (48 longs/doc) -> checkpoint once, and free
+    # it once ``plausible``, its only consumer, is materialized
+    new_idx = _materialize(minhash_index(new_docs, text_col, id_col,
+                                         shingle_k=shingle_k,
+                                         num_hashes=num_hashes, bands=bands))
 
     nb = new_idx.select(F.col(id_col).alias("_nid"),
                         F.col("sig").alias("_nsig"),
@@ -142,27 +134,20 @@ def incremental_neardup(new_docs: DataFrame, index: DataFrame,
               .select("_nid", "_oid", "_nsig", "_osig"))
     cand = cand_h.unionByName(cand_n).dropDuplicates(["_nid", "_oid"])
 
-    # signature-agreement estimate prefilter (see minhash_dedup): pairs
-    # that cannot plausibly clear the threshold never touch shingles
-    est_threshold = max(0.0, threshold - 0.2)
-    agree = F.size(
-        F.filter(F.zip_with("_nsig", "_osig",
-                            lambda x, y: (x == y).cast("int")),
-                 lambda v: v == 1)) / F.lit(float(num_hashes))
-    # localCheckpoint (round-13-opt, guide §3.3/§5 "materialise an
-    # intermediate to truncate the plan"): ``plausible`` feeds THREE
-    # consumers below (the verify semi-join's id list twice via the
-    # union, and the pair frame itself), and without materialization
-    # Catalyst plans the whole candidate subtree — index probe, band
-    # explodes, union, dropDuplicates — once PER consumer with zero
-    # exchange reuse (the executed plan carried 28 parquet scans / 50
-    # joins, and the per-run profile showed ~3.5 s of driver planning
-    # gaps against ~1.8 s of real compute at sf0.1). The frame is two id
-    # columns, bounded by the banding's candidate count — O(batch), not
-    # O(corpus) — so the checkpoint is cheap at any scale and the index
-    # is probed exactly once.
-    plausible = _materialize(cand.filter(agree >= est_threshold)
-                             .select("_nid", "_oid"))
+    # ``plausible`` feeds THREE consumers below (the verify semi-join's id
+    # list twice via the union, and the pair frame itself); without
+    # materialization Catalyst plans the whole candidate subtree — index
+    # probe, band explodes, union, dropDuplicates — once PER consumer with
+    # zero exchange reuse (the executed plan carried 28 parquet scans / 50
+    # joins, and ~3.5 s of driver planning gaps against ~1.8 s of real
+    # compute at sf0.1). The frame is two id columns, bounded by the
+    # banding's candidate count — O(batch), not O(corpus) — so the
+    # checkpoint is cheap at any scale and the index is probed once.
+    plausible = _materialize(
+        cand.filter(_agreement_prefilter("_nsig", "_osig", num_hashes,
+                                         threshold))
+        .select("_nid", "_oid"))
+    release_checkpoint(new_idx)
 
     # exact verify: re-shingle ONLY candidate docs (semi-join-bounded)
     all_docs = history.select(id_col, text_col).unionByName(
@@ -180,13 +165,9 @@ def incremental_neardup(new_docs: DataFrame, index: DataFrame,
         .select(F.col(id_col),
                 F.array_distinct(char_shingles(F.col(text_col),
                                                shingle_k)).alias("_sh")))
-    verified = (plausible
-                .join(sh.select(F.col(id_col).alias("_nid"),
-                                F.col("_sh").alias("_sha")), "_nid")
-                .join(sh.select(F.col(id_col).alias("_oid"),
-                                F.col("_sh").alias("_shb")), "_oid")
-                .withColumn("_j", jaccard(F.col("_sha"), F.col("_shb")))
-                .filter(F.col("_j") >= threshold))
+    verified = _verify_jaccard(
+        plausible, "_nid", "_oid", sh.withColumnRenamed(id_col, "_nid"),
+        sh.withColumnRenamed(id_col, "_oid"), threshold)
 
     best = (verified.groupBy("_nid")
             .agg(F.min_by(F.struct(F.col("_oid"), F.col("_j")),

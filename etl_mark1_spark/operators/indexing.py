@@ -868,7 +868,7 @@ def phrase_search(postings: DataFrame, phrase: list[str]) -> DataFrame:
         F.sequence(F.lit(0), F.lit(len(terms) - 1)),
         lambda i: F.try_element_at(arr, (i + 1).cast("int"))
         == F.col("token"))
-    anchored = (postings.filter(F.col("token").isin(list(set(terms))))
+    anchored = (postings.filter(F.col("token").isin(sorted(set(terms))))
                 .select("doc_id", "pos", F.explode(slots).alias("_slot"))
                 .select("doc_id",
                         (F.col("pos") - F.col("_slot")).alias("_anchor"),

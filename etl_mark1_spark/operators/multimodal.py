@@ -946,7 +946,9 @@ def video_neardup(df: DataFrame, id_col: str = "doc_id",
     merge). Min-label components as everywhere else. Candidate volume is
     bucket-bounded; only (id, frame_idx, 8-byte hash) rows shuffle —
     never frames. Returns (id_col, cluster_id); NULL payloads drop."""
-    from etl_mark1_spark.operators.dedup import _cluster_min_label
+    from etl_mark1_spark.operators.dedup import (_band_pairs,
+                                                 _cluster_min_label,
+                                                 _pigeonhole_buckets)
 
     # The hash-sequence frame fans out five ways (band buckets left/right,
     # both sides of the aligned verify, per-video counts, id universe);
@@ -954,23 +956,10 @@ def video_neardup(df: DataFrame, id_col: str = "doc_id",
     # everything downstream reads 12-byte rows.
     hashes = with_video_frame_hashes(df, id_col, content_col,
                                      every_ms).localCheckpoint()
-    n_bands = max_hamming + 1
-    width = 64 // n_bands
-    bucketed = hashes.select(
-        "doc_id", "frame_idx", "fhash",
-        F.explode(F.array(*[
-            F.concat_ws(":", F.lit(b),
-                        F.shiftrightunsigned(F.col("fhash"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1)).cast("string"))
-            for b in range(n_bands)
-        ])).alias("_bucket"))
-    left = bucketed.select(F.col("doc_id").alias("src"), "frame_idx",
-                           "_bucket")
-    right = bucketed.select(F.col("doc_id").alias("dst"), "frame_idx",
-                            "_bucket")
-    cand = (left.join(right, ["frame_idx", "_bucket"])
-            .filter(F.col("src") < F.col("dst"))
-            .select("src", "dst").dropDuplicates(["src", "dst"]))
+    cand = _band_pairs(hashes.select(
+        "doc_id", "frame_idx",
+        F.explode(_pigeonhole_buckets("fhash", max_hamming)).alias("_bucket")),
+        "doc_id", keys=("frame_idx", "_bucket"))
 
     counts = hashes.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_n"))
     ha = hashes.select(F.col("doc_id").alias("src"),

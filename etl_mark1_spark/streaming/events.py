@@ -560,6 +560,7 @@ def dedup_ingest_sink(stream_df: DataFrame, corpus_dir: str,
     corpus commit but before the index commit heals on replay: the
     corpus append skips, the index append lands). Drains with
     AvailableNow and returns."""
+    from etl_mark1_spark.operators.dedup import release_checkpoint
     from etl_mark1_spark.operators.incremental import (incremental_neardup,
                                                        minhash_index)
     from etl_mark1_spark.sources.versioned import read_table
@@ -590,6 +591,9 @@ def dedup_ingest_sink(stream_df: DataFrame, corpus_dir: str,
         _commit_once(accepted, corpus_dir, note)
         _commit_once(minhash_index(accepted, text_col, id_col), index_dir,
                      note)
+        # both commits have consumed the verdicts: free the candidate
+        # checkpoints behind them so storage stays flat across batches
+        release_checkpoint(verdicts, deep=True)
 
     _drain(stream_df, checkpoint, apply_batch)
 

@@ -417,6 +417,36 @@ def test_distributed_cluster_path_storage_released(spark):
     assert _persistent_rdd_count(spark) == before
 
 
+def test_neardup_distributed_cluster_path_matches_driver_path(
+        docs, vectors, spark, monkeypatch):
+    """The near-dup operators must return the same clusters whether the
+    verified edges are resolved by the driver union-find (what fixture
+    scale always takes) or by the distributed min-label propagation
+    (what corpus scale takes), forced here with ``driver_threshold=0``."""
+    import functools
+
+    from etl_mark1_spark.operators import dedup
+    from etl_mark1_spark.operators.dedup import release_checkpoint
+
+    runs = {
+        "minhash": lambda: dedup.minhash_dedup(docs, threshold=0.6),
+        "simhash": lambda: dedup.simhash_dedup(docs, max_hamming=8),
+        "embedding": lambda: dedup.embedding_neardup(
+            vectors, threshold=0.99, num_tables=4, planes_per_table=2),
+    }
+    driver = {name: {tuple(r) for r in run().collect()}
+              for name, run in runs.items()}
+    monkeypatch.setattr(dedup, "_cluster_min_label", functools.partial(
+        dedup._cluster_min_label, driver_threshold=0))
+    for name, run in runs.items():
+        result = run()
+        assert {tuple(r) for r in result.collect()} == driver[name], name
+        release_checkpoint(result, deep=True)
+    # every fixture has a real near-dup edge, so the forced path was run
+    assert all(len({c for _, c in rows}) < len(rows)
+               for rows in driver.values())
+
+
 def test_connected_components_known_graph(spark):
     """Hand-checkable labeling: chain, separate pair, self-loop singleton
     — every node labeled with its component's minimum id."""
@@ -1126,6 +1156,30 @@ def test_incremental_neardup_history_probe_broadcasts_batch(spark,
     out.collect()   # let AQE finalize its runtime join choices
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin [_bucket" in plan, plan[:2000]
+
+
+def test_incremental_neardup_leaves_storage_flat(spark):
+    """Repeated ingest screens in a long-lived session (the streaming
+    sink's use) must not accumulate checkpoint blocks: the batch
+    signature checkpoint is freed inside the call, and the two candidate
+    checkpoints the verdicts lean on go with the caller's
+    ``release_checkpoint(result, deep=True)``. Compared as ID sets, as in
+    test_minhash_dedup_leaves_storage_flat."""
+    from etl_mark1_spark.operators.dedup import release_checkpoint
+    from etl_mark1_spark.operators.incremental import (incremental_neardup,
+                                                       minhash_index)
+
+    history = _inc_docs(spark, [(0, BASE_A), (1, BASE_B)])
+    idx = minhash_index(history)
+    batch = _inc_docs(spark, [(10, BASE_A + " extra tail"), (11, BASE_C)])
+    before = _persistent_rdd_ids(spark)
+    for _ in range(2):
+        out = incremental_neardup(batch, idx, history, threshold=0.6)
+        assert {(r.doc_id, r.dup_of) for r in out.collect()} \
+            == {(10, 0), (11, None)}
+        release_checkpoint(out, deep=True)
+    leaked = _persistent_rdd_ids(spark) - before
+    assert not leaked, f"incremental_neardup left checkpoints: {leaked}"
 
 
 def test_minhash_index_fans_out_compact_file_corpus(spark, sf_dir):
