@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_mark1_spark.session import run_jobs
+
 
 def _exists(spark, path: str) -> bool:
     """Whether ``path`` exists, by one Hadoop ``FileSystem`` call."""
@@ -36,13 +38,8 @@ def _write_parts(parts: dict[str, DataFrame], base: str, mode: str,
     * ``seg`` adds a ``seg`` partition column written with DYNAMIC
       partition overwrite, so re-running the same (batch, seg)
       replaces exactly its own partitions.
-    * The writes are independent jobs and run from one thread pool, so
-      each job's straggler tail back-fills with the next job's tasks.
-      Every job inherits the caller's job group and description."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
+    * The writes are independent jobs and run through
+      ``session.run_jobs``, which keeps the caller's job group."""
     def job(part: str, df: DataFrame):
         def run() -> None:
             out, keys = df, [key] if key in df.columns else []
@@ -56,11 +53,10 @@ def _write_parts(parts: dict[str, DataFrame], base: str, mode: str,
             if keys:
                 writer = writer.partitionBy(*keys)
             writer.parquet(f"{base.rstrip('/')}/{part}")
-        return inheritable_thread_target(df.sparkSession)(run)
+        return run
 
-    with ThreadPoolExecutor(max_workers=len(parts)) as pool:
-        for done in [pool.submit(job(p, df)) for p, df in parts.items()]:
-            done.result()  # re-raise the first failure
+    spark = next(iter(parts.values())).sparkSession
+    run_jobs(spark, [job(part, df) for part, df in parts.items()])
 
 
 def _read_tombstones(spark, base: str, schema: str) -> DataFrame | None:

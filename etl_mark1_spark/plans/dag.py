@@ -9,14 +9,18 @@ breaks pipelining — the single biggest anti-pattern for scale.
 Here edges carry **DataFrames**: the whole DAG composes into lazy lineages and
 nothing materializes until a sink action. Catalyst then optimizes across node
 boundaries (filter from a late node can push down into an early scan).
-Independent branches become independent lineages whose sink actions can run
-concurrently on the cluster.
+
+The graph runs one Kahn level at a time. The nodes of a level are
+mutually independent (an edge always crosses levels), so a wider level
+runs its nodes from driver threads and their sink actions overlap on the
+cluster; the reference imports a process pool it never uses
+(engine.py:9, :60).
 
 Kept in spirit from the reference: per-node retry (3 attempts, 2·attempt
-backoff — engine.py:33-34,77-102), per-node run logs with duration, Kahn
-topological order. Fixed: cycle detection (the reference silently truncates
-cyclic graphs), ``conditional_branch`` has real semantics (the reference's
-is a pass-through — engine.py:311-314), and ``pdf_extract`` / ``split_json``
+backoff — engine.py:33-34,77-102) and per-node run logs with duration.
+Fixed: cycle detection (the reference silently truncates cyclic graphs),
+``conditional_branch`` has real semantics (the reference's is a
+pass-through — engine.py:311-314), and ``pdf_extract`` / ``split_json``
 are implemented (the reference declares them at engine.py:26-27 and never
 handles them; ``email_notify`` stays a logged pass-through — no SMTP here).
 
@@ -31,12 +35,17 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_mark1_spark.operators.steps import apply_steps
+from etl_mark1_spark.session import run_jobs
+
+# Attempts per node; an ExecutionError is not retried.
+MAX_RETRIES = 3
 
 
 class ExecutionError(Exception):
@@ -62,25 +71,27 @@ class RunReport:
 
 
 class PipelineExecutor:
-    """Walks the node DAG passing DataFrames along edges.
+    """Walks the node DAG level by level, passing DataFrames along edges.
 
-    ``observe_rows=True`` logs per-node row counts (like the reference's
+    A built-in node type other than a source (``file_input``,
+    ``connector_input``, ``pdf_extract``, ``invoke_http``) fails without
+    an attempt when no edge feeds it. ``observe_rows=True`` logs per-node row counts (like the reference's
     per-node row logs, engine.py:104-108) without an action of its own:
     the counts piggy-back on the sink actions the pipeline runs anyway
     (``Observation`` accumulators in the existing plans), so the lineage
     stays lazy end-to-end and the cluster runs one job, not one per node.
     """
 
-    def __init__(self, spark: SparkSession, max_retries: int = 3,
-                 retry_delay: float = 2.0, observe_rows: bool = False,
-                 parallel_branches: bool = False,
-                 max_parallel_nodes: int = 8):
+    def __init__(self, spark: SparkSession, retry_delay: float = 2.0,
+                 observe_rows: bool = False, parallel_branches: bool = True):
+        # perfbench/workloads.py passes parallel_branches=True; the level
+        # walk is the only walk, so False is refused.
+        if not parallel_branches:
+            raise ValueError("parallel_branches=False is no longer "
+                             "supported: every graph runs level by level")
         self.spark = spark
-        self._max_retries = max_retries
         self._retry_delay = retry_delay
         self._observe_rows = observe_rows
-        self._parallel_branches = parallel_branches
-        self._max_parallel_nodes = max_parallel_nodes
         self._node_outputs: dict[str, DataFrame | Any] = {}
         self._observations: dict[str, Any] = {}
         self._handlers: dict[str, Callable] = {
@@ -91,7 +102,8 @@ class PipelineExecutor:
             "conditional_branch": self._exec_conditional,
             "merge": self._exec_merge,
             "invoke_http": self._exec_invoke_http,
-            "webhook_send": self._exec_webhook_send,
+            "webhook_send": lambda node_id, config, inputs: self._exec_export(
+                node_id, {**config, "type": "webhook"}, inputs),
             "db_insert": self._exec_db_insert,
             "export": self._exec_export,
             "file_output": self._exec_file_output,
@@ -99,9 +111,12 @@ class PipelineExecutor:
             "pdf_extract": self._exec_pdf_extract,
             "split_json": self._exec_split_json,
         }
+        self._needs_input = set(self._handlers) - {
+            "file_input", "connector_input", "pdf_extract", "invoke_http"}
 
     def register_node_type(self, name: str, fn: Callable) -> None:
         self._handlers[name] = fn
+        self._needs_input.discard(name)
 
     # -- execution -----------------------------------------------------
 
@@ -113,19 +128,7 @@ class PipelineExecutor:
         nodes = definition.get("nodes", [])
         edges = definition.get("edges", [])
         report = RunReport(status="running")
-
-        if self._parallel_branches:
-            ok = self._execute_levels(nodes, edges, report)
-        else:
-            ok = True
-            for node in self._topological_sort(nodes, edges):
-                log = NodeLog(node_id=node["id"],
-                              node_type=node.get("type", ""))
-                report.node_logs.append(log)
-                if not self._execute_node(node, log, edges):
-                    ok = False
-                    break
-        if not ok:
+        if not self._execute_levels(nodes, edges, report):
             report.status = "failed"
             return report
         report.status = "succeeded"
@@ -163,36 +166,22 @@ class PipelineExecutor:
 
     def _execute_levels(self, nodes: list[dict], edges: list[dict],
                         report: RunReport) -> bool:
-        """Concurrent execution of independent branches, level by level.
+        """Run the graph one Kahn level at a time; False once a level has
+        a failed node, after every node of that level has finished.
 
-        The reference imports ProcessPoolExecutor and never uses it —
-        nodes run strictly serially (engine.py:9, :60). Here each Kahn
-        level's nodes (mutually independent by construction: an edge
-        always crosses levels) run on a thread pool; Spark's scheduler
-        interleaves their jobs across the cluster, so two independent
-        sink branches overlap instead of queueing. Transformation-only
-        nodes are near-free either way (lazy); the win is concurrent
-        ACTIONS — sinks, exports, validation counts.
-        """
-        from concurrent.futures import ThreadPoolExecutor
-
+        A level's nodes are mutually independent and run through
+        ``session.run_jobs``: a lone node runs inline, a wider level from
+        driver threads in the caller's job group, so Spark interleaves
+        their jobs. Transformation-only nodes are near-free either way
+        (lazy); the overlap is in the ACTIONS — sinks, exports, validation
+        scores."""
         for level in self._topo_levels(nodes, edges):
-            logs = []
-            for node in level:
-                log = NodeLog(node_id=node["id"],
-                              node_type=node.get("type", ""))
-                report.node_logs.append(log)
-                logs.append(log)
-            if len(level) == 1:
-                if not self._execute_node(level[0], logs[0], edges):
-                    return False
-                continue
-            workers = min(self._max_parallel_nodes, len(level))
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                results = list(pool.map(
-                    lambda pair: self._execute_node(pair[0], pair[1], edges),
-                    zip(level, logs)))
-            if not all(results):
+            logs = [NodeLog(node_id=node["id"], node_type=node.get("type", ""))
+                    for node in level]
+            report.node_logs.extend(logs)
+            if not all(run_jobs(self.spark, [
+                    partial(self._execute_node, node, log, edges)
+                    for node, log in zip(level, logs)])):
                 return False
         return True
 
@@ -221,8 +210,10 @@ class PipelineExecutor:
                         config: dict, edges: list[dict]) -> None:
         handler = self._handlers.get(node_type)
         inputs = self._get_inputs(node_id, edges)
+        if not inputs and node_type in self._needs_input:
+            raise ExecutionError(f"{node_type} node has no inputs")
         last_exc: Exception | None = None
-        for attempt in range(1, self._max_retries + 1):
+        for attempt in range(1, MAX_RETRIES + 1):
             log.attempts = attempt
             try:
                 if handler is None:
@@ -236,10 +227,10 @@ class PipelineExecutor:
                 raise  # semantic failures (validation breach etc.) don't retry
             except Exception as exc:  # transient: retry with linear backoff
                 last_exc = exc
-                if attempt < self._max_retries:
+                if attempt < MAX_RETRIES:
                     time.sleep(self._retry_delay * attempt)
         raise ExecutionError(f"node {node_id} failed after "
-                             f"{self._max_retries} attempts: {last_exc}")
+                             f"{MAX_RETRIES} attempts: {last_exc}")
 
     # -- node handlers ---------------------------------------------------
 
@@ -284,8 +275,6 @@ class PipelineExecutor:
         ("schema": DDL string) or is inferred from one sampled non-null
         value (bounded driver read); parsing itself is the JVM-side
         ``from_json`` on every row."""
-        if not inputs:
-            raise ExecutionError("split_json node has no inputs")
         df = inputs[0]
         column = config.get("column", "json")
         if column not in df.columns:
@@ -309,31 +298,24 @@ class PipelineExecutor:
     def _exec_transform(self, node_id: str, config: dict, inputs: list) -> None:
         """transform (engine.py:202-217): fold the step list — no
         materialization between nodes, unlike the reference's CSV round-trip."""
-        if not inputs:
-            raise ExecutionError("Transform node has no inputs")
         self._node_outputs[node_id] = apply_steps(inputs[0], config.get("steps", []))
 
     def _exec_validation(self, node_id: str, config: dict, inputs: list) -> None:
-        """validation (engine.py:219-233): quality gate, raise below min_score."""
-        from etl_mark1_spark.plans.quality import quality_report
+        """validation (engine.py:219-233): quality gate, raise below
+        min_score. Computes only the score (one null-count aggregate)."""
+        from etl_mark1_spark.plans.quality import quality_score
 
-        if not inputs:
-            raise ExecutionError("Validation node has no inputs")
-        quality = quality_report(inputs[0],
-                                 approx_distinct=config.get("approx", False))
+        score = quality_score(inputs[0])
         min_score = config.get("min_score", 50)
-        if quality["score"] < min_score:
+        if score < min_score:
             raise ExecutionError(
-                f"Quality score {quality['score']} below minimum {min_score}"
-            )
+                f"Quality score {score} below minimum {min_score}")
         self._node_outputs[node_id] = inputs[0]
 
     def _exec_conditional(self, node_id: str, config: dict, inputs: list) -> None:
         """conditional_branch — real semantics (reference pass-through,
         engine.py:311-314): rows matching ``condition`` flow downstream;
         ``mode="gate"`` instead passes everything iff any row matches."""
-        if not inputs:
-            raise ExecutionError("Conditional node has no inputs")
         df: DataFrame = inputs[0]
         condition = config.get("condition")
         if not condition:
@@ -350,8 +332,6 @@ class PipelineExecutor:
         positional; ``by_name=True`` opts into the safer by-name union."""
         from functools import reduce
 
-        if not inputs:
-            raise ExecutionError("Merge needs at least 1 input")
         dfs = [i for i in inputs if isinstance(i, DataFrame)]
         if config.get("by_name"):
             merged = reduce(
@@ -386,31 +366,19 @@ class PipelineExecutor:
             payload = resp.read().decode()
         self._node_outputs[node_id] = payload
 
-    def _exec_webhook_send(self, node_id: str, config: dict, inputs: list) -> None:
-        """webhook_send (engine.py:265-270) via the export adapter."""
-        from etl_mark1_spark.sources.export import get_export_adapter
-
-        if not inputs:
-            raise ExecutionError("Webhook node has no inputs")
-        get_export_adapter("webhook").export(inputs[0], config)
-        self._node_outputs[node_id] = inputs[0]
-
     def _exec_db_insert(self, node_id: str, config: dict, inputs: list) -> None:
         """db_insert (engine.py:272-278): distributed JDBC write."""
         from etl_mark1_spark.sources.writers import write_jdbc
 
-        if not inputs:
-            raise ExecutionError("db_insert node has no inputs")
         write_jdbc(inputs[0], config["url"], config["table"],
                    mode=config.get("mode", "append"), **config.get("options", {}))
         self._node_outputs[node_id] = inputs[0]
 
     def _exec_export(self, node_id: str, config: dict, inputs: list) -> None:
-        """export (engine.py:280-284): adapter dispatch."""
+        """export (engine.py:280-284): adapter dispatch. ``webhook_send``
+        (engine.py:265-270) runs here with ``type`` forced to webhook."""
         from etl_mark1_spark.sources.export import get_export_adapter
 
-        if not inputs:
-            raise ExecutionError("Export node has no inputs")
         adapter = get_export_adapter(config.get("type", "webhook"))
         adapter.export(inputs[0], config)
         self._node_outputs[node_id] = inputs[0]
@@ -421,8 +389,6 @@ class PipelineExecutor:
         overwriting in place (sources/versioned.py) — concurrent readers
         keep the old snapshot; ``mode: append`` becomes a rewrite-free
         O(delta) versioned append."""
-        if not inputs:
-            raise ExecutionError("File output node has no inputs")
         path = config.get("path") or config.get("filename", "output.csv")
         if config.get("versioned"):
             from etl_mark1_spark.sources.versioned import write_version
@@ -446,8 +412,6 @@ class PipelineExecutor:
         deterministic md5-of-id shard membership, within-shard sort,
         commit-last manifest. Config: path (required), num_shards,
         id_col, order_col."""
-        if not inputs:
-            raise ExecutionError("Shard output node has no inputs")
         path = config.get("path")
         if not path:
             raise ExecutionError("Shard output node requires a path")
@@ -477,12 +441,17 @@ class PipelineExecutor:
         """Kahn's algorithm grouped into dependency levels: every node in
         level k has all dependencies in levels < k, so nodes within one
         level are mutually independent and safe to run concurrently.
-        Same cycle detection as the flat sort."""
+        A cycle raises ExecutionError (the reference's sort,
+        engine.py:326-353, silently truncates cyclic graphs)."""
         node_map = {n["id"]: n for n in nodes}
         in_degree = {nid: 0 for nid in node_map}
         adjacency: dict[str, list[str]] = {nid: [] for nid in node_map}
         for edge in edges:
             src, tgt = edge["source"], edge["target"]
+            # count an edge only when BOTH endpoints are known nodes: a
+            # dangling edge (common after node deletion in React-Flow
+            # graphs) must not strand its target at in-degree > 0 and
+            # masquerade as a cycle
             if src in adjacency and tgt in in_degree:
                 adjacency[src].append(tgt)
                 in_degree[tgt] += 1
@@ -503,34 +472,3 @@ class PipelineExecutor:
             raise ExecutionError(
                 f"pipeline graph has a cycle involving: {cyclic}")
         return levels
-
-    @staticmethod
-    def _topological_sort(nodes: list[dict], edges: list[dict]) -> list[dict]:
-        """Kahn's algorithm with cycle detection (the reference's version,
-        engine.py:326-353, silently truncates cyclic graphs)."""
-        node_map = {n["id"]: n for n in nodes}
-        in_degree = {nid: 0 for nid in node_map}
-        adjacency: dict[str, list[str]] = {nid: [] for nid in node_map}
-        for edge in edges:
-            src, tgt = edge["source"], edge["target"]
-            # count an edge only when BOTH endpoints are known nodes: a
-            # dangling edge (common after node deletion in React-Flow
-            # graphs) must not strand its target at in-degree > 0 and
-            # masquerade as a cycle
-            if src in adjacency and tgt in in_degree:
-                adjacency[src].append(tgt)
-                in_degree[tgt] += 1
-
-        queue = sorted(nid for nid, deg in in_degree.items() if deg == 0)
-        order = []
-        while queue:
-            nid = queue.pop(0)
-            order.append(node_map[nid])
-            for neighbor in adjacency.get(nid, []):
-                in_degree[neighbor] -= 1
-                if in_degree[neighbor] == 0:
-                    queue.append(neighbor)
-        if len(order) != len(nodes):
-            cyclic = sorted(nid for nid, deg in in_degree.items() if deg > 0)
-            raise ExecutionError(f"pipeline graph has a cycle involving: {cyclic}")
-        return order

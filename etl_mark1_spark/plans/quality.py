@@ -28,11 +28,29 @@ def profile_aggregate(df: DataFrame, columns: list[str] | None = None,
     distinct_fn = F.approx_count_distinct if approx_distinct else F.countDistinct
     aggs = [F.count(F.lit(1)).alias("_total_rows")]
     for c in cols:
-        aggs.append(
-            F.count(F.when(F.col(c).isNull(), 1)).alias(f"_nulls_{c}")
-        )
+        aggs.append(_null_count(c))
         aggs.append(distinct_fn(F.col(c)).alias(f"_distinct_{c}"))
     return df.agg(*aggs)
+
+
+def _null_count(c: str):
+    return F.count(F.when(F.col(c).isNull(), 1)).alias(f"_nulls_{c}")
+
+
+def _score(total: int, null_counts: list[int]) -> float:
+    """The quality score: mean over columns of (1 - null_rate) * 100;
+    empty input scores 0.0."""
+    if total == 0:
+        return 0.0
+    return (sum((1.0 - n / total) * 100.0 for n in null_counts)
+            / len(null_counts))
+
+
+def quality_score(df: DataFrame) -> float:
+    """:func:`quality_report`'s score alone, from one aggregate of the
+    row count and a null count per column (no distinct counts)."""
+    row = df.agg(F.count(F.lit(1)), *map(_null_count, df.columns)).first()
+    return _score(row[0], list(row[1:]))
 
 
 def quality_report(df: DataFrame, columns: list[str] | None = None,
@@ -46,22 +64,17 @@ def quality_report(df: DataFrame, columns: list[str] | None = None,
     if total == 0:
         return {"score": 0.0, "row_count": 0, "column_count": len(cols), "details": {}}
 
-    details = {}
-    scores = []
-    for c in cols:
-        null_rate = row[f"_nulls_{c}"] / total
-        col_score = (1.0 - null_rate) * 100.0
-        details[c] = {
-            "null_count": row[f"_nulls_{c}"],
-            "null_rate": null_rate,
-            "distinct_count": row[f"_distinct_{c}"],
-            "unique_ratio": row[f"_distinct_{c}"] / total,
-            "score": col_score,
-        }
-        scores.append(col_score)
+    nulls = {c: row[f"_nulls_{c}"] for c in cols}
+    details = {c: {
+        "null_count": nulls[c],
+        "null_rate": nulls[c] / total,
+        "distinct_count": row[f"_distinct_{c}"],
+        "unique_ratio": row[f"_distinct_{c}"] / total,
+        "score": _score(total, [nulls[c]]),
+    } for c in cols}
 
     return {
-        "score": sum(scores) / len(scores),
+        "score": _score(total, list(nulls.values())),
         "row_count": total,
         "column_count": len(cols),
         "details": details,

@@ -10,8 +10,12 @@ cluster (AQE on, sensible shuffle partitioning, Arrow for the pandas boundary).
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
+
+# Most driver threads one run_jobs call runs at once.
+MAX_DRIVER_THREADS = 8
 
 
 def get_spark(
@@ -90,3 +94,22 @@ def codegen_compiles(spark: SparkSession) -> int:
     (Spark's CodegenMetrics; a codegen-cache hit compiles nothing)."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def run_jobs(spark: SparkSession, jobs: list[Callable[[], Any]]) -> list:
+    """Run independent no-argument ``jobs`` from driver threads and return
+    their results in submission order, re-raising the first failure once
+    every job has finished. Spark interleaves the jobs' tasks, so one
+    job's straggler tail back-fills with another's work. Each job runs
+    in the caller's job group and description. A single job runs
+    inline."""
+    if len(jobs) <= 1:
+        return [job() for job in jobs]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(min(MAX_DRIVER_THREADS, len(jobs))) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(job))
+                   for job in jobs]
+    return [f.result() for f in futures]

@@ -72,6 +72,26 @@ def test_export_node_dispatch(spark, http_sink, tmp_path):
     assert received and received[0][0]["id"] == 1
 
 
+def test_webhook_send_node_posts_through_webhook_adapter(spark, http_sink,
+                                                        tmp_path):
+    """webhook_send is the export node with the webhook adapter forced,
+    whatever ``type`` its config carries."""
+    server, received = http_sink
+    src = str(tmp_path / "hook.parquet")
+    spark.createDataFrame([(7, "h")], "id long, s string").write.parquet(src)
+    report = PipelineExecutor(spark).execute({
+        "nodes": [
+            {"id": "src", "type": "file_input", "config": {"path": src}},
+            {"id": "hook", "type": "webhook_send",
+             "config": {"type": "odoo_xmlrpc",
+                        "url": f"http://127.0.0.1:{server.server_port}/h"}},
+        ],
+        "edges": [{"source": "src", "target": "hook"}],
+    })
+    assert report.status == "succeeded", report.node_logs
+    assert received[-1] == [{"id": 7, "s": "h"}]
+
+
 def test_invoke_http_node(spark, http_sink, tmp_path):
     """invoke_http node: driver-side call, bounded input body."""
     server, received = http_sink

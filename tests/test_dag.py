@@ -71,8 +71,11 @@ def test_executor_reuse_resets_outputs(spark, sf_dir):
         "edges": [{"source": "old", "target": "tf"}],  # refers to prior run
     })
     assert "old" not in second.outputs
-    # the stale edge supplies no input, so the transform fails cleanly
+    # the stale edge supplies no input, so the transform fails cleanly,
+    # before any attempt
     assert second.status == "failed"
+    assert second.node_logs[-1].message == "transform node has no inputs"
+    assert second.node_logs[-1].attempts == 0
 
 
 def test_validation_gate_fails_run(spark, sf_dir):
@@ -233,49 +236,117 @@ def test_observe_rows_piggybacks_on_sink_action(spark, sf_dir, tmp_path):
     assert rows["dead"] is None     # no action on that branch
 
 
-def test_parallel_branches_match_serial(spark, sf_dir, tmp_path):
-    """A diamond DAG with two independent sink branches must produce
-    identical outputs under parallel_branches, with both sinks written
-    and per-level logs all green."""
-    def definition(tag):
-        return {
-            "nodes": [
-                {"id": "in", "type": "file_input",
-                 "config": {"path": f"{sf_dir}/orders.parquet",
-                            "format": "parquet"}},
-                {"id": "big", "type": "transform", "config": {"steps": [
-                    {"operator": "filter_rows",
-                     "params": {"expression": "o_totalprice > 100000"}}]}},
-                {"id": "small", "type": "transform", "config": {"steps": [
-                    {"operator": "filter_rows",
-                     "params": {"expression": "o_totalprice <= 100000"}}]}},
-                {"id": "out_big", "type": "file_output",
-                 "config": {"path": str(tmp_path / f"big_{tag}.parquet"),
-                            "format": "parquet"}},
-                {"id": "out_small", "type": "file_output",
-                 "config": {"path": str(tmp_path / f"small_{tag}.parquet"),
-                            "format": "parquet"}},
-            ],
-            "edges": [{"source": "in", "target": "big"},
-                      {"source": "in", "target": "small"},
-                      {"source": "big", "target": "out_big"},
-                      {"source": "small", "target": "out_small"}],
-        }
+def _diamond(sf_dir, out_dir):
+    """in -> {big, small} -> {out_big, out_small}: two independent sink
+    branches over orders, split on o_totalprice."""
+    return {
+        "nodes": [
+            {"id": "in", "type": "file_input",
+             "config": {"path": f"{sf_dir}/orders.parquet",
+                        "format": "parquet"}},
+            {"id": "big", "type": "transform", "config": {"steps": [
+                {"operator": "filter_rows",
+                 "params": {"expression": "o_totalprice > 100000"}}]}},
+            {"id": "small", "type": "transform", "config": {"steps": [
+                {"operator": "filter_rows",
+                 "params": {"expression": "o_totalprice <= 100000"}}]}},
+            {"id": "out_big", "type": "file_output",
+             "config": {"path": f"{out_dir}/big.parquet",
+                        "format": "parquet"}},
+            {"id": "out_small", "type": "file_output",
+             "config": {"path": f"{out_dir}/small.parquet",
+                        "format": "parquet"}},
+        ],
+        "edges": [{"source": "in", "target": "big"},
+                  {"source": "in", "target": "small"},
+                  {"source": "big", "target": "out_big"},
+                  {"source": "small", "target": "out_small"}],
+    }
 
-    serial = PipelineExecutor(spark).execute(definition("s"))
-    parallel = PipelineExecutor(
-        spark, parallel_branches=True).execute(definition("p"))
-    assert serial.status == parallel.status == "succeeded"
-    for side in ("big", "small"):
-        a = spark.read.parquet(str(tmp_path / f"{side}_s.parquet"))
-        b = spark.read.parquet(str(tmp_path / f"{side}_p.parquet"))
-        assert a.count() == b.count() > 0
-    assert {log.status for log in parallel.node_logs} == {"succeeded"}
+
+def test_parallel_branches_match_direct_filters(spark, sf_dir, tmp_path):
+    """A diamond DAG writes both sink branches, each holding exactly the
+    rows of the matching filter on orders, with every node log green."""
+    definition = _diamond(sf_dir, tmp_path)
+    report = PipelineExecutor(spark).execute(definition)
+    assert report.status == "succeeded"
+    assert {log.status for log in report.node_logs} == {"succeeded"}
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    for side, expr in (("big", "o_totalprice > 100000"),
+                       ("small", "o_totalprice <= 100000")):
+        written = spark.read.parquet(str(tmp_path / f"{side}.parquet"))
+        assert written.count() == orders.filter(expr).count() > 0
     # level structure: source alone, then the two transforms together
-    levels = PipelineExecutor._topo_levels(
-        definition("x")["nodes"], definition("x")["edges"])
+    levels = PipelineExecutor._topo_levels(definition["nodes"],
+                                           definition["edges"])
     assert [sorted(n["id"] for n in lv) for lv in levels] == [
         ["in"], ["big", "small"], ["out_big", "out_small"]]
+
+
+def test_pipeline_jobs_keep_the_callers_job_group(spark, sf_dir, tmp_path):
+    """The two sinks of one level run from driver threads, and their jobs
+    still land in the caller's job group: the group holds every job of
+    the run, and none of them runs without a group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pipeline-run", "diamond")
+    try:
+        report = PipelineExecutor(spark).execute(_diamond(sf_dir, tmp_path))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert report.status == "succeeded"
+    assert len(tracker.getJobIdsForGroup("pipeline-run")) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_run_jobs_keeps_order_and_reraises_first_failure(spark):
+    """run_jobs returns results in submission order whatever order the
+    jobs finish in, runs at most MAX_DRIVER_THREADS at once, runs a lone
+    job on the calling thread, and re-raises the first failure only
+    after every job has finished."""
+    import threading
+    import time
+
+    from etl_mark1_spark.session import MAX_DRIVER_THREADS, run_jobs
+
+    lock, active, peak = threading.Lock(), [0], [0]
+
+    def job(i):
+        def run():
+            with lock:
+                active[0] += 1
+                peak[0] = max(peak[0], active[0])
+            time.sleep(0.01 * (12 - i))  # later jobs finish first
+            with lock:
+                active[0] -= 1
+            return i
+        return run
+
+    assert run_jobs(spark, [job(i) for i in range(12)]) == list(range(12))
+    assert 1 < peak[0] <= MAX_DRIVER_THREADS
+    assert run_jobs(spark, [threading.get_ident]) == [threading.get_ident()]
+
+    finished = []
+
+    def fail(msg, delay):
+        def run():
+            time.sleep(delay)
+            raise RuntimeError(msg)
+        return run
+
+    def slow_ok():
+        time.sleep(0.2)
+        finished.append(True)
+
+    with pytest.raises(RuntimeError, match="first"):
+        run_jobs(spark, [fail("first", 0.05), fail("second", 0.0), slow_ok])
+    assert finished == [True]
+
+
+def test_serial_walk_is_refused(spark):
+    with pytest.raises(ValueError, match="parallel_branches"):
+        PipelineExecutor(spark, parallel_branches=False)
 
 
 def test_parallel_branches_failure_stops_run(spark, sf_dir):
@@ -293,22 +364,11 @@ def test_parallel_branches_failure_stops_run(spark, sf_dir):
                   {"source": "in", "target": "bad"},
                   {"source": "bad", "target": "never"}],
     }
-    report = PipelineExecutor(
-        spark, parallel_branches=True).execute(definition)
+    report = PipelineExecutor(spark).execute(definition)
     assert report.status == "failed"
     statuses = {log.node_id: log.status for log in report.node_logs}
     assert statuses["bad"] == "failed"
     assert "never" not in statuses  # downstream level never scheduled
-
-
-def test_parallel_branches_cycle_still_detected(spark):
-    with pytest.raises(ExecutionError, match="cycle"):
-        PipelineExecutor(spark, parallel_branches=True).execute({
-            "nodes": [{"id": "a", "type": "transform", "config": {}},
-                      {"id": "b", "type": "transform", "config": {}}],
-            "edges": [{"source": "a", "target": "b"},
-                      {"source": "b", "target": "a"}],
-        })
 
 
 def test_file_output_versioned_snapshots(spark, sf_dir, tmp_path):

@@ -66,21 +66,51 @@ def test_cleaning_pipeline_on_messy_csv(spark, products_messy_csv):
     assert rows["SKU-00003"].owner == " Cruz"  # NULL first name -> ''
 
 
+def _quality_mix(spark, n=100):
+    return spark.createDataFrame(
+        [(None, i, 1, i if i < n // 2 else None) for i in range(n)],
+        "all_null string, unique long, constant long, half_null long")
+
+
 def test_quality_mix_columns(spark):
     """B2: quality-score edge cases — all-null, unique, constant, half-null."""
     from etl_mark1_spark.plans.quality import quality_report
 
     n = 100
-    df = spark.createDataFrame(
-        [(None, i, 1, i if i < n // 2 else None) for i in range(n)],
-        "all_null string, unique long, constant long, half_null long")
-    q = quality_report(df)
+    q = quality_report(_quality_mix(spark, n))
     d = q["details"]
     assert d["all_null"]["score"] == 0.0
     assert d["unique"]["score"] == 100.0 and d["unique"]["unique_ratio"] == 1.0
     assert d["constant"]["unique_ratio"] == pytest.approx(1 / n)
     assert d["half_null"]["score"] == 50.0
     assert q["score"] == pytest.approx((0 + 100 + 100 + 50) / 4)
+
+
+def test_validation_gate_boundary_on_quality_mix(spark):
+    """B2's mix scores 62.5: a validation node gating at 62 passes it
+    and one gating at 63 fails the run, without a retry."""
+    from etl_mark1_spark.plans.quality import quality_score
+
+    df = _quality_mix(spark)
+    assert quality_score(df) == 62.5
+
+    def run(min_score):
+        ex = PipelineExecutor(spark)
+        ex.register_node_type(
+            "mix", lambda node_id, config, inputs:
+            ex._node_outputs.__setitem__(node_id, df))
+        return ex.execute({
+            "nodes": [{"id": "mix", "type": "mix", "config": {}},
+                      {"id": "val", "type": "validation",
+                       "config": {"min_score": min_score}}],
+            "edges": [{"source": "mix", "target": "val"}]})
+
+    assert run(62).status == "succeeded"
+    failed = run(63)
+    assert failed.status == "failed"
+    assert failed.node_logs[-1].message == \
+        "Quality score 62.5 below minimum 63"
+    assert failed.node_logs[-1].attempts == 1
 
 
 def test_union_parts_merge_node(spark, tmp_path):

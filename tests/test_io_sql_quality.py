@@ -7,7 +7,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from etl_mark1_spark.dtypes import schema_to_dicts, to_spark_type_name
-from etl_mark1_spark.plans.quality import quality_report
+from etl_mark1_spark.plans.quality import quality_report, quality_score
 from etl_mark1_spark.plans.sql import execute_sql, infer_schema, preview
 from etl_mark1_spark.sources.readers import detect_format, read_file
 from etl_mark1_spark.sources.writers import write_file
@@ -147,12 +147,14 @@ def test_quality_report_formula(spark):
     assert q["details"]["a"]["null_count"] == 1
     assert q["details"]["a"]["distinct_count"] == 3
     assert q["details"]["b"]["score"] == 0.0
+    assert quality_score(df) == q["score"]
 
 
 def test_quality_report_empty(spark):
     df = spark.createDataFrame([], "a int, b string")
     q = quality_report(df)
     assert q == {"score": 0.0, "row_count": 0, "column_count": 2, "details": {}}
+    assert quality_score(df) == 0.0
 
 
 def test_quality_report_approx(spark, sf_dir):
